@@ -395,8 +395,8 @@ def main() -> None:
             run_query(fn(spark, sf_dir))
             runs.append(round(time.perf_counter() - t0, 3))
         # A query is "warm" when any of its passes was served in part
-        # by a cross-query session cache (the minhash / ngram-truth
-        # pair sets, the graph/sketch single-entry caches, the IVF
+        # by the cross-query session cache (the minhash / ngram-truth
+        # pair sets, the plan-keyed graph/sketch tables, the IVF
         # probe memo): its number is a PIPELINE-STAGE cost — the
         # derivation cost lands in whichever query built the cache
         # first — not a standalone cost (VERDICT r11 "what's wrong" #2

@@ -86,7 +86,7 @@ DEFAULT_BAND_BUCKETS = 128
 # on every successful write into the directory FROM ANY PROCESS, so a
 # cross-process append flips the pruned-vs-flat choice on the next
 # read (one stat) instead of waiting for a restart (the r7 staleness
-# gap; same discipline as similarity._PROBE_CACHE). A token of None
+# gap; same discipline as similarity._freshness_token). A token of None
 # (no _SUCCESS: non-Spark writer / marker disabled) disables the memo
 # for that path — correctness of the CHOICE degrades to one recursive
 # listing per read, never to a stale answer. Out-of-band changes that

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datafusion_dist_spark.operators.common import cached_plan
+
 # Fixed-point score scale: 1.0 == 1_000_000 micro-units. All score
 # arithmetic is BIGINT add / multiply / integer-divide (truncating on
 # positives, identical in Spark `div` and DuckDB `//`), so every
@@ -29,20 +31,6 @@ SCALE = 1_000_000
 DAMPING_NUM = 85  # damping 0.85 as an exact rational 85/100
 DAMPING_DEN = 100
 BASE = SCALE * (DAMPING_DEN - DAMPING_NUM) // DAMPING_DEN  # (1-d)*SCALE
-
-# Single-entry caches for materialized edge tables (see pagerank /
-# triangle_count); bounded like llm._PAIR_CACHE so a session sweeping
-# multiple graphs never pins more than one edge list per operator.
-_CACHED_SRC_DEG: DataFrame | None = None
-_CACHED_TRI_EDGES: DataFrame | None = None
-_CACHED_TRI_ORIENTED: DataFrame | None = None
-
-
-# Shared with operators/common.py since r6 (global_row_number uses the
-# same persist-reuse discipline).
-from datafusion_dist_spark.operators.common import (  # noqa: E402
-    single_entry_cache as _single_entry_cache,
-)
 
 
 def bipartite_edges(
@@ -115,11 +103,9 @@ def pagerank(
     its subtree (measured: 14 re-scans of lineitem for 3 iterations
     with no cache, zero ReusedExchange), so the edge materialization
     is the load-bearing step — the same pattern as the persisted
-    MinHash pair set. The cache is bounded to a SINGLE entry: a call
-    over a different edge input unpersists the previous table first
-    (CacheManager keys on the logical plan, so identical repeated
-    calls still share one entry; an interleaved second graph merely
-    recomputes, never miscomputes). 100 TB of lineitem distills to
+    MinHash pair set, held in the session cache (``cached_plan``:
+    two entries, so two interleaved graphs both stay warm; a third
+    evicts and unpersists the oldest). 100 TB of lineitem distills to
     |C|+|S| nodes ≪ input.
 
     Iteration count is NOT bounded by plan growth: lineage is cut
@@ -144,12 +130,11 @@ def pagerank(
     # keyed the same way share one exchange).
     from pyspark.sql import Window
 
-    global _CACHED_SRC_DEG
-    src_deg, _CACHED_SRC_DEG = _single_entry_cache(
+    src_deg = cached_plan(
+        "pagerank_src_deg",
         edges.withColumn(
             "outdeg", F.count("*").over(Window.partitionBy("src"))
         ),
-        _CACHED_SRC_DEG,
     )
     # Initial score: 1.0 (== SCALE) for every node. Node set = all
     # srcs (symmetric graph: srcs == dsts == nodes); derived from the
@@ -259,8 +244,8 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     Three shuffles total (degree agg, wedge join, closure join) over
     id-only rows; the payload never moves.
 
-    The input edge list is materialized once (single-entry persisted
-    cache, the pagerank pattern): it is referenced five times in the
+    The input edge list is materialized once (session-cached, the
+    pagerank pattern): it is referenced five times in the
     final plan (degree agg, two orientation joins, both wedge sides,
     closure), and Catalyst inlines every reference as a full copy of
     the upstream subtree — for the co-purchase graph that means five
@@ -268,8 +253,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     cached plan's join work is sub-second). Edges are id pairs, so the
     cached table is ≪ input data on any real graph.
     """
-    global _CACHED_TRI_EDGES
-    edges, _CACHED_TRI_EDGES = _single_entry_cache(edges, _CACHED_TRI_EDGES)
+    edges = cached_plan("triangle_edges", edges)
     # explode, not unionAll: a union of two selects inlines the edge
     # subtree twice; explode touches it once.
     deg = (
@@ -297,8 +281,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
     # The oriented list is itself referenced three times (both wedge
     # sides + the closure probe); materialize it once too.
-    global _CACHED_TRI_ORIENTED
-    e, _CACHED_TRI_ORIENTED = _single_entry_cache(e, _CACHED_TRI_ORIENTED)
+    e = cached_plan("triangle_oriented", e)
     w1, w2 = e.alias("w1"), e.alias("w2")
     dst_lt = (F.col("w1.dst_deg") < F.col("w2.dst_deg")) | (
         (F.col("w1.dst_deg") == F.col("w2.dst_deg"))

@@ -44,6 +44,7 @@ from datafusion_dist_spark.functions.hashing import (
     hash_int60,
     hash_int60_oracle,
 )
+from datafusion_dist_spark.operators.common import cached_plan, forget
 
 
 def _bucket(key: Column, h: int, width: int) -> Column:
@@ -396,9 +397,6 @@ def kmv_sketch_oracle(
     """
 
 
-_CACHED_KMV_SK: DataFrame | None = None
-
-
 def kmv_intersection_matrix(
     sk: DataFrame, group_col: str, k: int = KMV_K
 ) -> DataFrame:
@@ -438,7 +436,7 @@ def kmv_intersection_matrix(
     cached sketch, so the fence costs a scan of <= groups*k cached
     rows and never an extra pass over the base table); the replicate
     join streams <= groups*k sketch rows against the broadcast pairs.
-    The sketch is PERSISTED first (single-entry cache, bounded at
+    The sketch is PERSISTED first (session-cached, bounded at
     groups*k rows by construction): the pair frame is a broadcast
     branch, which materializes as its own job where exchange reuse
     cannot see the main plan's shuffles (the r8 broadcast-recompute
@@ -458,15 +456,12 @@ def kmv_intersection_matrix(
     sketch built with a SMALLER k is indistinguishable from genuinely
     under-filled (exact) groups and cannot be caught here; pass k
     explicitly wherever the build did."""
-    global _CACHED_KMV_SK
-    from datafusion_dist_spark.operators.common import single_entry_cache
-
-    sk, _CACHED_KMV_SK = single_entry_cache(sk, _CACHED_KMV_SK)
+    sk = cached_plan("kmv_sketch", sk)
     # One tiny job over the cached sketch serves both guards: the
     # quadratic-in-groups fence and the k-mismatch check. A REJECTED
-    # sketch must not keep the single cache slot (ADVICE r10): without
-    # the unpersist a failed call would pin the bad sketch in executor
-    # memory until a semantically different call evicted it.
+    # sketch must not keep its cache slot (ADVICE r10): without the
+    # forget a failed call would pin the bad sketch in executor memory
+    # until later calls evicted it.
     try:
         probe = sk.agg(
             F.countDistinct(group_col).alias("n_groups"),
@@ -482,11 +477,7 @@ def kmv_intersection_matrix(
             )
         overlap_pair_guard(probe["n_groups"] or 0, "kmv_intersection_matrix")
     except Exception:
-        _CACHED_KMV_SK = None
-        try:
-            sk.unpersist()
-        except Exception:
-            pass
+        forget(sk.sparkSession, "kmv_sketch", (sk.semanticHash(),))
         raise
     hs = float(KMV_HASH_SPACE)
     stats = sk.groupBy(group_col).agg(

@@ -19,14 +19,8 @@ from pyspark.sql import functions as F
 
 from datafusion_dist_spark.catalog import load_table
 from datafusion_dist_spark.operators import sketch
-from datafusion_dist_spark.operators.common import (
-    single_entry_cache as _single_entry_cache,
-)
+from datafusion_dist_spark.operators.common import cached_plan
 from datafusion_dist_spark.registry import register, register_sql
-
-# Single-entry persist slot for the overlap matrix's distinct-type
-# frame (guard probe + pair frame share one source pass).
-_CACHED_HLL_TYPES: DataFrame | None = None
 
 
 def cents(col: str) -> F.Column:
@@ -171,15 +165,29 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_approx_distinct",
-    oracle=None,  # sketch values are engine-specific; rows-only check
+    oracle="""
+        SELECT l_returnflag, count(DISTINCT l_orderkey) AS n_orders,
+               TRUE AS within_bound
+        FROM lineitem GROUP BY l_returnflag
+    """,
     doc="approx_count_distinct (HyperLogLog++) — the scale path for "
-    "distinct counts at 100 TB. No oracle: sketch estimates are "
-    "engine-specific by construction (SURVEY §2.C 'parity stretch').",
+    "distinct counts at 100 TB. Sketch estimates are engine-specific "
+    "(SURVEY §2.C 'parity stretch'), so the entry projects what is "
+    "deterministic: the exact distinct count and whether the estimate "
+    "lands within ceil(0.15 × exact) of it — 3× Spark's default HLL++ "
+    "relativeSD of 0.05 (the system_running_jobs pattern).",
 )
 def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
-        F.approx_count_distinct("l_orderkey").alias("approx_orders")
+        F.approx_count_distinct("l_orderkey").alias("approx"),
+        F.count_distinct("l_orderkey").alias("n_orders"),
+    ).select(
+        "l_returnflag",
+        "n_orders",
+        F.expr("abs(approx - n_orders) <= ceil(n_orders * 0.15)").alias(
+            "within_bound"
+        ),
     )
 
 
@@ -810,7 +818,6 @@ def agg_hll_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a type drops out on BOTH engines (the oracle's pair frame is
     # registers-derived — without this filter the Spark side would
     # emit an extra all-zero pair row the oracle omits).
-    global _CACHED_HLL_TYPES
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     regs = sketch.hll_registers(ev, "user_id", group_cols=("event_type",))
     types = (
@@ -823,7 +830,7 @@ def agg_hll_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CACHE, so fence + pair frame share ONE column-pruned source pass
     # (review r10: a limit-above-distinct probe cannot early-stop its
     # map stage — the old probe paid a full extra scan per call).
-    types, _CACHED_HLL_TYPES = _single_entry_cache(types, _CACHED_HLL_TYPES)
+    types = cached_plan("hll_overlap_types", types)
     sketch.overlap_pair_guard(types.count(), "agg_hll_overlap_matrix")
     ta = types.select(F.col("event_type").alias("type_a"))
     tb = types.select(F.col("event_type").alias("type_b"))

@@ -12,8 +12,6 @@ deterministically (the raw synthetic corpus has no duplicates).
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,6 +23,7 @@ from datafusion_dist_spark.functions.hashing import (
     tokens_oracle,
 )
 from datafusion_dist_spark.operators import dedup, multimodal, similarity, text
+from datafusion_dist_spark.operators.common import session_cache
 from datafusion_dist_spark.registry import register
 
 # -- shared SQL fragments --------------------------------------------------
@@ -134,54 +133,6 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(F.explode(fan).alias("doc_id"), "text")
 
 
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-_PAIR_CACHE_LOCK = threading.Lock()
-
-_TRUTH_CACHE: dict[tuple[str, str], DataFrame] = {}
-_TRUTH_CACHE_LOCK = threading.Lock()
-
-
-def _session_pair_cache(
-    cache: dict, lock: threading.Lock, spark: SparkSession, sf_dir: str, build
-) -> DataFrame:
-    """Shared discipline for the per-(session, sf_dir) persisted pair
-    sets (``_minhash_pairs_shared`` / ``_ngram_truth_shared``): bounded
-    to TWO entries (ADVICE r2, tightened after review) — entries from a
-    dead session are dropped always, and beyond capacity the oldest
-    live entry is evicted, but a concurrent job on the OTHER sf_dir of
-    the same session keeps its pair set (a single-entry cache let
-    alternating X/Y requests unpersist a DataFrame another job's
-    connected-components loop was still iterating). The lock prevents a
-    first-call race from double-persisting. Warm lookups are reported
-    to ``common.note_session_cache_hit`` so bench records can annotate
-    cache-consuming queries (VERDICT r11 task 6)."""
-    from datafusion_dist_spark.operators.common import note_session_cache_hit
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with lock:
-        df = cache.get(key)
-        if df is not None:
-            note_session_cache_hit()
-            return df
-        for k in list(cache):
-            if k[0] != key[0]:  # stale session
-                try:
-                    cache[k].unpersist()
-                except Exception:  # its session may be gone
-                    pass
-                del cache[k]
-        while len(cache) >= 2:  # capacity: evict oldest
-            k = next(iter(cache))
-            try:
-                cache[k].unpersist()
-            except Exception:
-                pass
-            del cache[k]
-        df = build().persist()
-        cache[key] = df
-    return df
-
-
 def _minhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash-LSH near-dup pair set, persisted once per
     (session, sf_dir).
@@ -193,14 +144,13 @@ def _minhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard materialization point: the pair set is tiny relative to
     the corpus (candidates only), every CC iteration re-reads it, and
     downstream consumers (cluster resolution, keep-list builds) reuse
-    it without touching the corpus again. Capacity/eviction discipline
-    in :func:`_session_pair_cache`.
+    it without touching the corpus again. Held in
+    :func:`~datafusion_dist_spark.operators.common.session_cache`.
     """
-    return _session_pair_cache(
-        _PAIR_CACHE,
-        _PAIR_CACHE_LOCK,
+    return session_cache(
         spark,
-        sf_dir,
+        "minhash_pairs",
+        (sf_dir,),
         lambda: dedup.minhash_dedup_pairs(
             _corpus(spark, sf_dir),
             bands=BANDS,
@@ -228,13 +178,12 @@ def _ngram_truth_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     BYPASSES this cache, so the bench keeps measuring the full
     derivation cost every round; the quality gate reads the persisted
     copy, same as every other downstream consumer would at 100 TB.
-    Capacity/eviction discipline in :func:`_session_pair_cache`.
+    Held in :func:`~datafusion_dist_spark.operators.common.session_cache`.
     """
-    return _session_pair_cache(
-        _TRUTH_CACHE,
-        _TRUTH_CACHE_LOCK,
+    return session_cache(
         spark,
-        sf_dir,
+        "ngram_truth",
+        (sf_dir,),
         lambda: dedup.ngram_jaccard_pairs(
             _corpus(spark, sf_dir),
             threshold=0.5,
