@@ -22,8 +22,11 @@ import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass, field
 
+from pyspark.serializers import NoOpSerializer
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
+from pyspark.traceback_utils import SCCallSiteSync
+from pyspark.util import _load_from_socket, _local_iterator_from_socket
 
 from datafusion_dist_spark import catalog
 from datafusion_dist_spark.session import build_session
@@ -40,24 +43,16 @@ RUNNING_JOBS_SCHEMA = T.StructType(
 )
 
 
-def _run_job_streamed(sc, rdd, partition: int) -> Iterator:
-    """Run a single-partition job and YIELD its elements as they are
-    read off the JVM result socket — ``SparkContext.runJob`` with the
-    trailing ``list(...)`` removed (pyspark wraps the exact same
-    ``PythonRDD.runJob`` + ``_load_from_socket`` pair in a list, which
-    materializes every element in Python before the caller sees the
-    first one). The reference streams each ticket's partition batch by
-    batch (``networks/tonic/src/server.rs:109-141``); this is the
-    Spark-side equivalent for the per-partition pull model."""
-    from pyspark.rdd import _load_from_socket
-    from pyspark.traceback_utils import SCCallSiteSync
+def arrow_schema(df: DataFrame) -> "pa.Schema":
+    """The Arrow schema of ``df``'s result: the schema Spark's JVM
+    converter (``ArrowConverters``) writes its record batches in, and
+    the one ``df.toArrow()`` returns."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    mapped = rdd.mapPartitions(lambda it: it)
-    with SCCallSiteSync(sc):
-        sock_info = sc._jvm.PythonRDD.runJob(
-            sc._jsc.sc(), mapped._jrdd, [int(partition)]
-        )
-    yield from _load_from_socket(sock_info, mapped._jrdd_deserializer)
+    return to_arrow_schema(
+        df.schema,
+        prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes(),
+    )
 
 
 class EngineTerminatingError(RuntimeError):
@@ -165,10 +160,6 @@ class JobRegistry:
             entry.pulls_in_flight = max(0, entry.pulls_in_flight - 1)
             entry.last_pull_at = time.time()
 
-    def touch(self, entry: JobEntry) -> None:
-        with self._lock:
-            entry.last_pull_at = time.time()
-
     def record_output(self, entry: JobEntry, rows: int, nbytes: int) -> None:
         """Per-stream output accounting — the reference's TaskStream
         records output_rows/output_bytes as batches flow through it
@@ -272,39 +263,37 @@ class JobHandle:
         by partition — the analog of one FlightSQL ``do_get`` per
         stage-0 partition (``main.rs:209-265``).
 
-        Columnar end-to-end: each executor serializes its partition
-        into LZ4-compressed Arrow IPC chunks of ≤ ``batch_rows`` rows
-        (``mapInArrow`` — the same wire format as the reference's
-        Flight data plane, ``networks/tonic/src/server.rs:109-141``,
-        LZ4 at 125-127); the driver pulls one IPC chunk per Python
-        "row" via ``toLocalIterator`` and deserializes it with a
-        vectorized Arrow read. Driver-side Python cost is O(chunks),
-        never O(rows) — no ``asDict`` loops — and memory is bounded at
-        one partition plus one chunk (``toArrow()`` would collect the
-        entire result before yielding the first batch).
+        Columnar end-to-end, never re-serialized: executors encode each
+        partition as Arrow IPC record-batch messages with Spark's own
+        JVM converter (``toArrowBatchRdd``, ≤ ``spark.sql.execution.
+        arrow.maxRecordsPerBatch`` rows each); the driver serves one
+        partition at a time (``toLocalIteratorAndServe``, no prefetch)
+        and Python wraps each message as a batch, sliced zero-copy to ≤
+        ``batch_rows`` — like the reference's data plane
+        (``networks/tonic/src/server.rs:109-141``). No executor Python
+        worker; driver Python cost is O(batches), memory one partition
+        plus one batch. The trade: executor→driver bytes are
+        uncompressed Arrow (that converter ignores the arrow
+        compression codec conf); LZ4 is on the client-facing Flight
+        wire only.
 
         A client that abandons the iterator mid-stream (GeneratorExit)
         is recorded, not leaked as a forever-running job; a client
         that stalls without closing is swept by the TTL GC via
         ``last_pull_at``.
         """
-        import pyarrow as pa
-
         self._enter_job_scope()
         reg = self._engine.jobs
         reg.begin_pull(self._entry)
         try:
-            for row in self._ipc_chunk_df(batch_rows).toLocalIterator():
-                with pa.ipc.open_stream(row.chunk) as reader:
-                    for batch in reader:
-                        self._count_output(batch)
-                        # Hand control to the client with the in-flight
-                        # flag dropped: a client that stalls here ages
-                        # out by TTL; one that comes back re-arms the
-                        # exemption before Spark computes again.
-                        reg.end_pull(self._entry)
-                        yield batch
-                        reg.begin_pull(self._entry)
+            sc = self._engine.spark.sparkContext
+            with SCCallSiteSync(sc):
+                sock_info = sc._jvm.PythonRDD.toLocalIteratorAndServe(
+                    self.df._jdf.toArrowBatchRdd(), False
+                )
+            yield from self._deliver(
+                _local_iterator_from_socket(sock_info, NoOpSerializer()), batch_rows
+            )
             reg.finish(self.job_id)
         except GeneratorExit:
             reg.finish(self.job_id, error=reg.ABANDONED)
@@ -315,25 +304,32 @@ class JobHandle:
         finally:
             reg.end_pull(self._entry)
 
-    def _ipc_chunk_df(self, batch_rows: int) -> DataFrame:
-        """Plan (lazily) the result as a one-binary-column DataFrame of
-        Arrow IPC stream payloads, produced executor-side."""
+    def _deliver(self, messages: Iterator, batch_rows: int) -> Iterator:
+        """Decode each Arrow IPC record-batch message read off the JVM
+        result socket and yield it in zero-copy slices of ≤
+        ``batch_rows`` rows. Control passes to the client with the
+        in-flight flag dropped: a client that stalls at a ``yield``
+        ages out by TTL; one that comes back re-arms the exemption
+        before Spark computes again."""
+        import pyarrow as pa
 
-        def _serialize(batches: Iterator) -> Iterator:
-            import pyarrow as pa
-
-            opts = pa.ipc.IpcWriteOptions(compression="lz4")
-            for batch in batches:
-                for off in range(0, batch.num_rows, batch_rows):
-                    chunk = batch.slice(off, batch_rows)
-                    sink = pa.BufferOutputStream()
-                    with pa.ipc.new_stream(sink, chunk.schema, options=opts) as w:
-                        w.write_batch(chunk)
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array([sink.getvalue().to_pybytes()])], names=["chunk"]
-                    )
-
-        return self.df.mapInArrow(_serialize, "chunk binary")
+        reg = self._engine.jobs
+        schema = arrow_schema(self.df)
+        for raw in messages:
+            # Message-level fetch counter: lets tests (and operators)
+            # observe that batches are yielded while later messages are
+            # still unfetched.
+            with reg._lock:
+                self._entry.extra["chunks_fetched"] = (
+                    self._entry.extra.get("chunks_fetched", 0) + 1
+                )
+            batch = pa.ipc.read_record_batch(pa.py_buffer(raw), schema)
+            for off in range(0, batch.num_rows, batch_rows):
+                chunk = batch.slice(off, batch_rows)
+                self._count_output(chunk)
+                reg.end_pull(self._entry)
+                yield chunk
+                reg.begin_pull(self._entry)
 
     def materialize_partitions(self, batch_rows: int = 10_000) -> int:
         """Opt-in per-partition pull model — the reference's ticket
@@ -346,16 +342,18 @@ class JobHandle:
         which is why it is opt-in and not the default path.
 
         After this call, :meth:`stream_partition` pulls exactly one
-        final-stage partition per call; upstream stages are computed
-        once here and their shuffle output is REUSED by every pull
-        (same RDD lineage), and re-pulling a partition re-executes
-        only that partition — the reference's TaskSet-reset semantics
+        final-stage partition per call, as :meth:`stream_arrow`'s
+        JVM-native Arrow batches; upstream stages are computed once here
+        and their shuffle output is REUSED by every pull (same RDD
+        lineage), and re-pulling a partition re-executes only that
+        partition — the reference's TaskSet-reset semantics
         (``dist/src/runtime.rs:499-525``).
 
         Returns the number of final-stage partitions."""
         self._enter_job_scope()
-        rdd = self._ipc_chunk_df(batch_rows).rdd
+        rdd = self.df._jdf.toArrowBatchRdd()
         self._entry.extra["partition_rdd"] = rdd
+        self._entry.extra["batch_rows"] = batch_rows
         n = rdd.getNumPartitions()
         self._entry.extra["n_partitions"] = n
         return n
@@ -367,15 +365,14 @@ class JobHandle:
 
         Incremental like the reference's per-ticket stream
         (``networks/tonic/src/server.rs:109-141``): the partition's
-        LZ4 IPC chunks are read off the result socket one at a time
-        and each batch is yielded before the next chunk is fetched
-        into Python — driver-side Python memory is bounded at ONE
-        chunk, never the whole partition (a skewed final partition at
-        100× scale must not become a driver OOM). The JVM still buffers
-        the task's compressed result, bounded by
-        ``spark.driver.maxResultSize``."""
-        import pyarrow as pa
-
+        JVM-encoded Arrow record-batch messages are read off the
+        result socket one at a time and each batch is yielded before
+        the next message is fetched into Python — driver-side Python
+        memory is bounded at ONE batch, never the whole partition (a
+        skewed final partition at 100× scale must not become a driver
+        OOM). The JVM still buffers the task's uncompressed Arrow
+        result, bounded by ``spark.driver.maxResultSize``; LZ4 applies
+        on the client-facing Flight wire only."""
         rdd = self._entry.extra.get("partition_rdd")
         if rdd is None:
             raise RuntimeError(
@@ -385,23 +382,15 @@ class JobHandle:
         reg = self._engine.jobs
         reg.begin_pull(self._entry)
         try:
-            for row in _run_job_streamed(
-                self._engine.spark.sparkContext, rdd, int(partition)
-            ):
-                # Chunk-level fetch counter: lets tests (and operators)
-                # observe that batches are yielded while later chunks
-                # are still unfetched.
-                with reg._lock:
-                    self._entry.extra["chunks_fetched"] = (
-                        self._entry.extra.get("chunks_fetched", 0) + 1
-                    )
-                reg.touch(self._entry)
-                with pa.ipc.open_stream(row.chunk) as reader:
-                    for batch in reader:
-                        self._count_output(batch)
-                        reg.end_pull(self._entry)
-                        yield batch
-                        reg.begin_pull(self._entry)
+            sc = self._engine.spark.sparkContext
+            with SCCallSiteSync(sc):
+                sock_info = sc._jvm.PythonRDD.runJob(
+                    sc._jsc.sc(), rdd.toJavaRDD(), [int(partition)]
+                )
+            yield from self._deliver(
+                _load_from_socket(sock_info, NoOpSerializer()),
+                self._entry.extra["batch_rows"],
+            )
             # Job completion = every partition drained at least once —
             # the reference's CheckJobCompleted over stage-0 partitions
             # (dist/src/event.rs:214-334).
@@ -414,7 +403,7 @@ class JobHandle:
         the registry so the counters are lock-guarded against
         concurrent per-partition pulls."""
         self._engine.jobs.record_output(
-            self._entry, batch.num_rows, batch.get_total_buffer_size()
+            self._entry, batch.num_rows, batch.nbytes
         )
 
     def collect(self) -> list[Row]:

@@ -7,8 +7,10 @@ starting lazily at ``do_get`` per ticket (``main.rs:209-265``) and a
 ``running_jobs`` virtual table queryable remotely
 (``integration-tests/tests/sqllogictest.rs:20-22``). This module is
 the Spark analog: a ``pyarrow.flight`` server whose tickets resolve
-to :meth:`JobHandle.stream_arrow` — columnar, LZ4-IPC-serialized on
-executors, streamed incrementally through the driver.
+to :meth:`JobHandle.stream_arrow` — columnar, as the Arrow record
+batches Spark's JVM converter builds on the executors, streamed
+incrementally through the driver and LZ4-compressed on this wire only
+(executor→driver bytes are uncompressed Arrow).
 
 Ticket granularity — both models, the trade made explicit: the
 reference mints **one ticket per final-stage partition**
@@ -21,7 +23,7 @@ laziness contract (a never-fetched ticket must execute nothing,
 ``integration-tests/tests/exception.rs:30-54``). Default (plain SQL
 command): one ticket per *job*, fully lazy, with partition
 granularity inside the stream (batches arrive
-partition-by-partition via ``toLocalIterator``). Opt-in (JSON
+partition-by-partition, one partition served at a time). Opt-in (JSON
 command ``{"query": ..., "partitioned": true}``): the reference's
 exact model — one ticket per final-stage partition, independently
 pullable and re-pullable with upstream shuffle output shared across
@@ -51,6 +53,7 @@ from datafusion_dist_spark.engine import (
     DistEngine,
     EngineTerminatingError,
     JobHandle,
+    arrow_schema,
 )
 from datafusion_dist_spark.netretry import call_with_retry
 
@@ -61,12 +64,6 @@ try:  # pyarrow.flight is optional at import time (gated per contract)
     _HAVE_FLIGHT = True
 except ImportError:  # pragma: no cover - env without flight
     _HAVE_FLIGHT = False
-
-
-def _arrow_schema(df) -> "pa.Schema":
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(df.schema)
 
 
 # gRPC's default metadata cap is 8 KiB and the message is percent-
@@ -366,7 +363,7 @@ if _HAVE_FLIGHT:
                         return f"`{db.replace('`', '``')}`.`{esc}`"
 
                     cols["table_schema"] = [
-                        _arrow_schema(spark.table(qualified(r[1], r[2])))
+                        arrow_schema(spark.table(qualified(r[1], r[2])))
                         .serialize()
                         .to_pybytes()
                         for r in rows
@@ -495,7 +492,7 @@ if _HAVE_FLIGHT:
                     flight.FlightEndpoint(_ticket({"job_id": handle.job_id}), [])
                 ]
             return flight.FlightInfo(
-                _arrow_schema(handle.df), descriptor, endpoints, -1, -1
+                arrow_schema(handle.df), descriptor, endpoints, -1, -1
             )
 
         def do_get(self, context, ticket):
@@ -539,11 +536,10 @@ if _HAVE_FLIGHT:
                 gen = handle.stream_partition(int(spec["partition"]))
             else:
                 gen = handle.stream_arrow()
-            # LZ4 on the client-facing stream too: the executor→driver
-            # chunks are LZ4 IPC already; re-serializing them
-            # uncompressed for the wire would undo that. The reference
-            # compresses its data plane end-to-end
-            # (networks/tonic/src/server.rs:125-127).
+            # LZ4 on the client-facing stream: the executor→driver
+            # batches arrive uncompressed from Spark's JVM converter,
+            # so this wire is where the reference's data-plane
+            # compression (networks/tonic/src/server.rs:125-127) lands.
             opts = pa.ipc.IpcWriteOptions(
                 compression="lz4" if self.compress_results else None
             )
@@ -551,7 +547,7 @@ if _HAVE_FLIGHT:
                 first = next(gen)
             except StopIteration:
                 return flight.GeneratorStream(
-                    _arrow_schema(handle.df), iter(()), options=opts
+                    arrow_schema(handle.df), iter(()), options=opts
                 )
             except Exception as exc:  # surfaces e.g. a UDF raise
                 raise flight.FlightServerError(_err_msg(exc)) from exc
@@ -641,7 +637,7 @@ if _HAVE_FLIGHT:
                         "malformed CreatePreparedStatement request"
                     )
                 try:
-                    schema_bytes = _arrow_schema(
+                    schema_bytes = arrow_schema(
                         self.engine.sql(sql)
                     ).serialize().to_pybytes()
                 except Exception as exc:

@@ -17,11 +17,12 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datafusion_dist_spark.engine import DistEngine
+from datafusion_dist_spark.engine import DistEngine, arrow_schema
 from tests.conftest import SF_DIR
 
 
@@ -77,9 +78,10 @@ def test_result_streaming_arrow_batches(engine):
 
 def test_stream_arrow_is_columnar_and_fast(engine):
     """VERDICT r1 #2: result delivery must not be a per-row Python
-    loop on the driver. Structural check: the chunk plan serializes
-    executor-side via MapInArrow (LZ4 Arrow IPC, the reference's wire
-    format, networks/tonic/src/server.rs:125-127); behavioral check:
+    loop on the driver. Structural check: delivery adds no Python node
+    to the plan — executors encode Arrow batches with Spark's JVM
+    converter, as the reference streams its partitions' batches
+    as-is (networks/tonic/src/server.rs:109-141); behavioral check:
     ~1M rows stream through the driver well inside a bound the old
     asDict/from_pylist path could not meet."""
     n = 1_000_000
@@ -87,8 +89,9 @@ def test_stream_arrow_is_columnar_and_fast(engine):
         "id", "id * 2 AS dbl", "concat('row-', id) AS tag"
     ).createOrReplaceTempView("_stream_src")
     handle = engine.submit("SELECT * FROM _stream_src")
-    plan = handle._ipc_chunk_df(65_536)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan, plan
+    plan = handle.df._jdf.queryExecution().executedPlan().toString()
+    for node in ("MapInArrow", "PythonUDF", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
     t0 = time.monotonic()
     total = 0
     max_batch = 0
@@ -358,6 +361,95 @@ def test_stream_partition_is_incremental(engine):
         "were fetched — partition pull is not incremental"
     )
     assert handle._entry.status == "completed"
+
+
+_PARITY_TYPES_SQL = """
+SELECT id,
+  IF(id % 7 = 0, NULL, TIMESTAMP'2020-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id * 37)) AS ts,
+  IF(id % 7 = 1, NULL, CAST(id AS DECIMAL(10, 2)) / 8) AS dec,
+  IF(id % 7 = 2, NULL, DATE'2020-01-01' + CAST(id % 900 AS INT)) AS dt,
+  IF(id % 7 = 3, NULL, array(id, IF(id % 2 = 0, NULL, id + 1))) AS arr,
+  IF(id % 7 = 4, NULL, named_struct('x', IF(id % 11 = 0, NULL, id),
+                                   'y', IF(id % 11 = 1, NULL, CAST(id AS STRING)))) AS st,
+  IF(id % 7 = 5, NULL, map(concat('k', id % 3), id)) AS mp,
+  IF(id % 7 = 6, NULL, CAST(concat('b', id) AS BINARY)) AS bin,
+  IF(id % 3 = 0, NULL, concat('s-', id)) AS str
+FROM range(25000)
+"""
+
+
+def _arrow_table(batches, df):
+    return pa.Table.from_batches(batches) if batches else arrow_schema(df).empty_table()
+
+
+def _assert_delivery_parity(engine, location, sql):
+    """stream_arrow, every per-partition pull in order, and Flight each
+    return exactly ``df.toArrow()``: same rows, order and schema."""
+    from datafusion_dist_spark.flight_server import flight_execute
+
+    want = engine.spark.sql(sql).toArrow()
+    h = engine.submit(sql)
+    got = _arrow_table(list(h.stream_arrow()), h.df)
+    assert got.schema == want.schema and got.equals(want)
+    h = engine.submit(sql)
+    n = h.materialize_partitions()
+    got = _arrow_table(
+        [b for p in range(n) for b in h.stream_partition(p)], h.df
+    )
+    assert got.schema == want.schema and got.equals(want)
+    got = flight_execute(location, sql)
+    assert got.schema == want.schema and got.equals(want)
+    return n
+
+
+def test_delivery_parity_with_to_arrow(engine):
+    """Delivery hands the client the JVM's own Arrow batches: every
+    delivery path returns a table equal to ``df.toArrow()`` — schema
+    included — over a type matrix with NULLs in every column, an empty
+    result, an ORDER BY spread over several final partitions (its
+    order must survive) and large var types. Fails loudly if the JVM
+    converter entry point (``Dataset.toArrowBatchRdd``) goes away."""
+    from datafusion_dist_spark.flight_server import serve_background
+
+    srv = serve_background(engine)
+    conf = engine.spark.conf
+    try:
+        _assert_delivery_parity(engine, srv.location, _PARITY_TYPES_SQL)
+        _assert_delivery_parity(
+            engine, srv.location, f"SELECT * FROM ({_PARITY_TYPES_SQL}) WHERE id < 0"
+        )
+        # Without coalescing the ORDER BY keeps its 8 range partitions.
+        conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        n = _assert_delivery_parity(
+            engine,
+            srv.location,
+            "SELECT (id * 7919) % 10007 AS k, concat('v', id) AS v "
+            "FROM range(10007) ORDER BY k DESC",
+        )
+        assert n >= 3, n
+        # Large var types change the JVM's wire layout (64-bit offsets);
+        # the decode schema must follow the conf.
+        conf.set("spark.sql.execution.arrow.useLargeVarTypes", "true")
+        _assert_delivery_parity(
+            engine, srv.location, "SELECT id, str, bin FROM (" + _PARITY_TYPES_SQL + ")"
+        )
+    finally:
+        conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        conf.unset("spark.sql.execution.arrow.useLargeVarTypes")
+        srv.shutdown()
+
+
+def test_batch_rows_bounds_delivered_batches(engine):
+    """``batch_rows`` below Spark's 10,000-row Arrow batches slices them
+    (zero-copy) so no delivered batch exceeds it, on both pull paths."""
+    sql = "SELECT id, concat('r', id) AS tag FROM range(25000)"
+    h = engine.submit(sql)
+    sizes = [b.num_rows for b in h.stream_arrow(batch_rows=1_000)]
+    assert sum(sizes) == 25_000 and max(sizes) <= 1_000
+    h = engine.submit(sql)
+    n = h.materialize_partitions(batch_rows=1_000)
+    sizes = [b.num_rows for p in range(n) for b in h.stream_partition(p)]
+    assert sum(sizes) == 25_000 and max(sizes) <= 1_000
 
 
 def test_gc_never_sweeps_executing_pull(engine):

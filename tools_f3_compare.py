@@ -27,28 +27,77 @@ coverage (the per-run canaries in the record let a reader audit that)
 from __future__ import annotations
 
 import json
+import math
 import sys
 
 
-def _load(paths: list[str]) -> dict[str, dict]:
+def _load(sources) -> dict[str, dict]:
+    """Merge JSONL inputs (paths or open text streams) per query. Every
+    run is kept; ``jobs``/``facts`` come from the row whose runs hold
+    that query's min wall, so they describe the run the record reports."""
     out: dict[str, dict] = {}
-    for path in paths:
-        for line in open(path):
-            line = line.strip()
-            if not line:
-                continue
-            row = json.loads(line)
-            q = row["query"]
-            e = out.setdefault(
-                q, {"runs": [], "jobs": None, "facts": None}
-            )
-            e["runs"].extend(
-                {"wall": r["wall"], "canary": r["canary"]}
-                for r in row["runs"]
-            )
-            e["jobs"] = row.get("jobs_last_run")
-            e["facts"] = row.get("facts")
+    for src in sources:
+        with open(src) if isinstance(src, str) else src as f:
+            for line in f:
+                line = line.strip()
+                if not line:
+                    continue
+                row = json.loads(line)
+                runs = [{"wall": r["wall"], "canary": r["canary"]} for r in row["runs"]]
+                e = out.setdefault(row["query"], {"runs": [], "jobs": None, "facts": None})
+                best = min((r["wall"] for r in e["runs"]), default=math.inf)
+                e["runs"].extend(runs)
+                if runs and min(r["wall"] for r in runs) < best:
+                    e["jobs"] = row.get("jobs_last_run")
+                    e["facts"] = row.get("facts")
     return out
+
+
+def compare(prev: dict[str, dict], now: dict[str, dict], prev_label: str = "prev") -> dict:
+    """The comparison record over the queries both sides measured. A
+    query with a zero wall on either side gets ``ratio: None`` and is
+    listed in ``zero_wall``, outside the geomean; the geomean is None
+    when no query is left."""
+    queries = {}
+    ratios = []
+    zero_wall = []
+    for q in sorted(set(prev) & set(now)):
+        p, n = prev[q], now[q]
+        wp = min((r["wall"] for r in p["runs"]), default=0.0)
+        wn = min((r["wall"] for r in n["runs"]), default=0.0)
+        if wp > 0 and wn > 0:
+            ratios.append(wn / wp)
+            ratio = round(wn / wp, 3)
+        else:
+            zero_wall.append(q)
+            ratio = None
+        queries[q] = {
+            "prev_wall": wp,
+            "now_wall": wn,
+            "ratio": ratio,
+            "prev_jobs": p["jobs"],
+            "now_jobs": n["jobs"],
+            "prev_runs": p["runs"],
+            "now_runs": n["runs"],
+            "now_facts": n["facts"],
+        }
+    geo = math.exp(sum(math.log(r) for r in ratios) / len(ratios)) if ratios else None
+    return {
+        "metric": "f3_per_query_compare",
+        "corpus": "/tmp/ddspark-scale/f3 (bench_scale.py deterministic x3 corpus)",
+        "prev_label": prev_label,
+        "method": (
+            "tools_profile_queries.py per tree; wall = min over ALL runs"
+            " of that tree (every run kept with its host canary; quiet"
+            " host = matmul canary <= ~0.012)"
+        ),
+        "n_queries": len(queries),
+        "total_prev": round(sum(v["prev_wall"] for v in queries.values()), 3),
+        "total_now": round(sum(v["now_wall"] for v in queries.values()), 3),
+        "geomean_ratio": None if geo is None else round(geo, 3),
+        "zero_wall": zero_wall,
+        "queries": queries,
+    }
 
 
 def main() -> None:
@@ -72,51 +121,15 @@ def main() -> None:
             cur.append(a)
         else:
             raise SystemExit(f"unexpected arg {a}")
-    prev = _load(prev_paths)
-    now = _load(now_paths)
-    queries = {}
-    ratios = []
-    for q in sorted(set(prev) & set(now)):
-        p, n = prev[q], now[q]
-        wp = min(r["wall"] for r in p["runs"])
-        wn = min(r["wall"] for r in n["runs"])
-        ratio = round(wn / wp, 3)
-        ratios.append(wn / wp)
-        queries[q] = {
-            "prev_wall": wp,
-            "now_wall": wn,
-            "ratio": ratio,
-            "prev_jobs": p["jobs"],
-            "now_jobs": n["jobs"],
-            "prev_runs": p["runs"],
-            "now_runs": n["runs"],
-            "now_facts": n["facts"],
-        }
-    import math
-
-    geo = math.exp(sum(math.log(r) for r in ratios) / len(ratios))
-    record = {
-        "metric": "f3_per_query_compare",
-        "corpus": "/tmp/ddspark-scale/f3 (bench_scale.py deterministic x3 corpus)",
-        "prev_label": prev_label,
-        "method": (
-            "tools_profile_queries.py per tree; wall = min over ALL runs"
-            " of that tree (every run kept with its host canary; quiet"
-            " host = matmul canary <= ~0.012)"
-        ),
-        "n_queries": len(queries),
-        "total_prev": round(sum(v["prev_wall"] for v in queries.values()), 3),
-        "total_now": round(sum(v["now_wall"] for v in queries.values()), 3),
-        "geomean_ratio": round(geo, 3),
-        "queries": queries,
-    }
+    record = compare(_load(prev_paths), _load(now_paths), prev_label)
     with open(out_path, "w") as f:
         json.dump(record, f, indent=1, sort_keys=False)
         f.write("\n")
     print(
-        f"wrote {out_path}: {len(queries)} queries, "
+        f"wrote {out_path}: {record['n_queries']} queries, "
         f"{record['total_prev']} -> {record['total_now']} s, "
         f"geomean ratio {record['geomean_ratio']}"
+        + (f", zero walls skipped: {record['zero_wall']}" if record["zero_wall"] else "")
     )
 
 
