@@ -141,6 +141,35 @@ def run_query(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
+def time_entry(spark, name: str, sf_dir: str, runs: int) -> list[float]:
+    """Wall seconds of ``runs`` passes of registry entry ``name`` at
+    ``sf_dir`` into the noop sink. Each pass rebuilds the DataFrame
+    (fresh QueryExecution), so only JVM/codegen warmth and the session
+    cache carry over; callers keep the min as the steady-state cost,
+    because co-tenant spikes on a shared host inflate single runs 2-6x."""
+    fn = registry.all_specs()[name].spark_fn
+    walls: list[float] = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        run_query(fn(spark, sf_dir))
+        walls.append(time.perf_counter() - t0)
+    return walls
+
+
+def emit(record: dict, out_path: str | None) -> None:
+    """Stamp the host-noise fields onto a harness record, print it as
+    ONE JSON line and write it to ``out_path`` when given. ``loadavg``
+    and ``canary`` (see host_canary) let a reader divide cross-run wall
+    drift by host throughput before reading it as a code change."""
+    record["loadavg"] = [round(v, 2) for v in os.getloadavg()]
+    record["canary"] = host_canary()
+    line = json.dumps(record)
+    print(line)
+    if out_path:
+        with open(out_path, "w") as fh:
+            fh.write(line + "\n")
+
+
 def warmup(spark, sf_dir: str) -> None:
     """Absorb one-time environment spin-up so timings measure query
     work: JVM/task-scheduler start, whole-stage-codegen infrastructure,
@@ -372,28 +401,19 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)/?$", sf_dir)
     sf = m.group(1) if m else "0"  # unknown layout: report 0, don't crash
     spark = build_session("ddspark-bench")
-    specs = registry.all_specs()
     warmup(spark, sf_dir)
     from datafusion_dist_spark.operators.common import session_cache_hits
 
-    # Three passes per query, keep the min: this host shows transient
-    # co-tenant CPU and I/O spikes that inflate single runs 2-6x (and
-    # can poison two consecutive runs); min-of-3 reports steady-state
-    # query cost. Each pass rebuilds the DataFrame (fresh
-    # QueryExecution) — only JVM/codegen warmth carries over.
+    # Min-of-3 per query (time_entry): a single co-tenant spike can
+    # poison two consecutive runs.
     timings: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     warm: dict[str, bool] = {}
     load_before = list(os.getloadavg())
     canary = host_canary()
     for name in HEADLINE:
-        fn = specs[name].spark_fn
-        runs: list[float] = []
         hits0 = session_cache_hits()
-        for _ in range(3):
-            t0 = time.perf_counter()
-            run_query(fn(spark, sf_dir))
-            runs.append(round(time.perf_counter() - t0, 3))
+        runs = [round(t, 3) for t in time_entry(spark, name, sf_dir, 3)]
         # A query is "warm" when any of its passes was served in part
         # by the cross-query session cache (the minhash / ngram-truth
         # pair sets, the plan-keyed graph/sketch tables, the IVF

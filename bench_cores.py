@@ -40,17 +40,19 @@ where the engine got fast"):
   as one task no matter the core count. That was the whole
   pipeline_clean_corpus "anti-scaling" (0.89x): the pushed-down
   quality filter is the correct 100 TB plan (filter before shuffle),
-  but locally it was split-bound, not serialized. The parent sizes
-  spark.sql.files.maxPartitionBytes once from the largest corpus
-  file (≥ 2x the high core count of splits, clamped to [128 KB,
-  128 MB]) and both children inherit the SAME value, exactly the
+  but locally it was split-bound, not serialized. Each child sizes
+  spark.sql.files.maxPartitionBytes from its corpus and the HIGH core
+  count (corpus_split_bytes: ≥ 2x that many splits of the smallest
+  heavy input, clamped to [128 KB, 128 MB]), so both core counts
+  apply the SAME value, exactly the
   "size maxPartitionBytes to the target SF" discipline a production
   deployment applies.
 
 Usage:
   python bench_cores.py [--factor 30] [--cores 8,32] [--runs 2]
-                        [--out BENCH_CORES_r06.json] [--no-assert]
-  python bench_cores.py --child --cores-n 8 --dir DIR --runs 2  # internal
+                        [--out artifacts/BENCH_CORES.json] [--no-assert]
+  python bench_cores.py --child --cores-n 8 --cores 8,32 --dir DIR \
+                        --runs 2  # internal
 """
 
 from __future__ import annotations
@@ -59,9 +61,10 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from datafusion_dist_spark.catalog import DEFAULT_SF_DIR
 
 # The heavy tier: every bench_scale entry whose x10 wall is >= ~1.5 s
 # (cheap entries are scheduling-bound and carry no parallelism signal).
@@ -193,25 +196,28 @@ BELOW_FLOOR_REASONS = {
 }
 
 
-def child(cores_n: int, sf_dir: str, runs: int, names: list[str]) -> None:
+def child(
+    cores_n: int, hi_cores: int, sf_dir: str, runs: int, names: list[str]
+) -> None:
     os.environ["SPARK_GRAFT_CPUS"] = str(cores_n)
-    from datafusion_dist_spark import registry
     from datafusion_dist_spark.session import build_session
 
     import bench
 
-    spark = build_session(f"ddspark-bench-cores-{cores_n}")
+    spark = build_session(
+        f"ddspark-bench-cores-{cores_n}",
+        extra_conf={
+            "spark.sql.files.maxPartitionBytes": str(
+                corpus_split_bytes(sf_dir, hi_cores)
+            ),
+            "spark.sql.files.openCostInBytes": "262144",
+        },
+    )
     bench.warmup(spark, sf_dir)
-    specs = registry.all_specs()
-    out: dict[str, float] = {}
-    for name in names:
-        fn = specs[name].spark_fn
-        t = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            t = min(t, time.perf_counter() - t0)
-        out[name] = round(t, 3)
+    out = {
+        name: round(min(bench.time_entry(spark, name, sf_dir, runs)), 3)
+        for name in names
+    }
     spark.stop()
     print("CORES_RESULT " + json.dumps(out))
 
@@ -225,8 +231,8 @@ def corpus_split_bytes(scale_dir: str, hi_cores: int) -> int:
     """maxPartitionBytes sized so the SMALLEST heavy-tier input file
     yields at least 2x hi_cores scan splits (clamped to [128 KB,
     128 MB]) — the local stand-in for a production corpus, where any
-    table is thousands of splits. Computed ONCE by the parent so both
-    core counts run the identical plan."""
+    table is thousands of splits. A pure function of the corpus dir and
+    the HIGH core count, so both core counts run the identical plan."""
     smallest = min(
         (
             os.path.getsize(os.path.join(scale_dir, f"{t}.parquet"))
@@ -274,13 +280,14 @@ def main() -> None:
     if child_n is not None and child_n > 0:
         child(
             child_n,
-            sf_dir or "/root/testdata/sf0.1",
+            max(cores),
+            sf_dir or DEFAULT_SF_DIR,
             runs,
             names_arg.split(",") if names_arg else list(HEAVY),
         )
         return
 
-    base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    base_dir = DEFAULT_SF_DIR
     scale_dir = os.environ.get(
         "SPARK_GRAFT_SCALE_DIR", f"/tmp/ddspark-scale/f{factor}"
     )
@@ -311,6 +318,7 @@ def main() -> None:
     }
     mpb = mpb_by_factor[factor]
     print(f"scan split sizes: {mpb_by_factor} bytes", file=sys.stderr)
+    lo_n, hi_n = cores
     walls: dict[int, dict[str, float]] = {}
     for n in cores:
         walls[n] = {}
@@ -319,10 +327,6 @@ def main() -> None:
                 f"running {len(names)} entries at local[{n}] factor {f} ...",
                 file=sys.stderr,
             )
-            env = dict(
-                os.environ,
-                SPARK_GRAFT_MAX_PARTITION_BYTES=str(mpb_by_factor[f]),
-            )
             proc = subprocess.run(
                 [
                     sys.executable,
@@ -330,6 +334,8 @@ def main() -> None:
                     "--child",
                     "--cores-n",
                     str(n),
+                    "--cores",
+                    f"{lo_n},{hi_n}",
                     "--dir",
                     dirs[f],
                     "--runs",
@@ -339,7 +345,6 @@ def main() -> None:
                 ],
                 capture_output=True,
                 text=True,
-                env=env,
                 timeout=7200,
             )
             line = [
@@ -352,7 +357,6 @@ def main() -> None:
                 raise SystemExit(f"child at {n} cores (factor {f}) failed")
             walls[n].update(json.loads(line[0][len("CORES_RESULT "):]))
 
-    lo_n, hi_n = cores
     queries: dict[str, dict] = {}
     violations: list[str] = []
     for name in HEAVY:
@@ -410,13 +414,11 @@ def main() -> None:
             f"  speedup x{speedup}{flag}",
             file=sys.stderr,
         )
-    import bench  # host canary: cross-round drift normalization
+    import bench
 
     result = {
         "metric": "strong_scaling",
         "factor": factor,
-        "loadavg": [round(v, 2) for v in os.getloadavg()],
-        "canary": bench.host_canary(),
         "cores": list(cores),
         "runs_per_query": runs,
         "scan_split_bytes": mpb,
@@ -433,11 +435,7 @@ def main() -> None:
         "queries": queries,
         "violations": violations,
     }
-    line = json.dumps(result)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as fh:
-            fh.write(line + "\n")
+    bench.emit(result, out_path)
     if violations and do_assert:
         print("strong-scaling gate FAILED", file=sys.stderr)
         raise SystemExit(1)

@@ -38,13 +38,12 @@ is recorded if the auto-select picks the slower side by more than
 Usage:
   python bench_index.py [--docs 200000,1000000,4000000]
                         [--buckets 128] [--runs 2]
-                        [--out BENCH_INDEX_r07.json]
+                        [--out artifacts/BENCH_INDEX.json]
 """
 
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import shutil
 import sys
@@ -54,6 +53,9 @@ from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
+
+import bench
+from datafusion_dist_spark.catalog import DEFAULT_SF_DIR
 
 WORK = "/tmp/ddspark-index-bench"
 BANDS, ROWS_PER_BAND = 4, 4
@@ -113,7 +115,7 @@ def main() -> None:
     ap.add_argument("--docs", default="200000,1000000,4000000")
     ap.add_argument("--buckets", type=int, default=128)
     ap.add_argument("--runs", type=int, default=2)
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
+    ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
     ap.add_argument("--out", default=None)
     ap.add_argument("--keep", action="store_true", help="keep index dirs")
     args = ap.parse_args()
@@ -254,17 +256,8 @@ def main() -> None:
         "prune_min_index_files": dedup.PRUNE_MIN_INDEX_FILES,
         "bucket_min_index_bytes": dedup.BUCKET_MIN_INDEX_BYTES,
         "violations": violations,
-        "loadavg": [round(v, 2) for v in os.getloadavg()],
-        # Host throughput probes (bench.host_canary): divide cross-round
-        # wall drift by the canary ratio before reading it as a code
-        # change — VERDICT r8 task 3.
-        "canary": __import__("bench").host_canary(),
     }
-    line = json.dumps(result)
-    print(line)
-    if args.out:
-        with open(args.out, "w") as fh:
-            fh.write(line + "\n")
+    bench.emit(result, args.out)
     if not args.keep:
         shutil.rmtree(WORK, ignore_errors=True)
     spark.stop()

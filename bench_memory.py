@@ -21,7 +21,8 @@ Pass/fail contract: every entry must COMPLETE (a spill is fine and
 invisible here except as wall time; an OOM/executor-lost fails the
 entry) and finish within ``--mult`` x its local[32] wall at the same
 x10 corpus, read from a reference artifact (default
-BENCH_SCALE_r06.json (or the skew artifact with --skew), `scaled_sec` rows) — the stated budget for "8
+artifacts/BENCH_SCALE.json, or artifacts/BENCH_SCALE_SKEW.json with
+--skew; its `scaled_sec` rows) — the stated budget for "8
 bounded cores vs 32 unbounded cores plus cluster overhead". Entries
 without a reference row get the absolute ``--cap`` seconds.
 
@@ -37,8 +38,8 @@ read from the skew reference artifact, and the AQE skew-join probe
 must still report a split plan inside the bounded heap.
 
 Usage:
-  python bench_memory.py --factor 10 --out BENCH_MEMORY_r06.json
-  python bench_memory.py --skew zipf --out BENCH_MEMORY_SKEW_r06.json
+  python bench_memory.py --factor 10 --out artifacts/BENCH_MEMORY.json
+  python bench_memory.py --skew zipf --out artifacts/BENCH_MEMORY_SKEW.json
   python bench_memory.py --queries dedup_minhash_lsh_capped --no-assert
 
 Prints ONE JSON line:
@@ -55,6 +56,9 @@ import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
+
+import bench
+from datafusion_dist_spark.catalog import DEFAULT_SF_DIR
 
 MASTER = "local-cluster[2,4,4096]"
 DEFAULT_MULT = 8.0  # vs local[32] scaled_sec: 4x fewer cores + overhead
@@ -105,15 +109,16 @@ def main() -> None:
         else:
             raise SystemExit(f"unknown argument {a!r}")
     if ref_path is None:
-        ref_path = (
-            "BENCH_SCALE_SKEW_r11.json" if skew else "BENCH_SCALE_r11.json"
+        ref_path = os.path.join(
+            "artifacts",
+            "BENCH_SCALE_SKEW.json" if skew else "BENCH_SCALE.json",
         )
 
     from bench_scale import SCALE_QUERIES, SKEW_QUERIES
     from datafusion_dist_spark import registry
     from datafusion_dist_spark.scale import scale_corpus
 
-    base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    base_dir = DEFAULT_SF_DIR
     suffix = f"-{skew}" if skew else ""
     scale_dir = os.environ.get(
         "SPARK_GRAFT_SCALE_DIR", f"/tmp/ddspark-scale/f{factor}{suffix}"
@@ -204,13 +209,9 @@ def main() -> None:
                 "partition inside the bounded-memory cluster"
             )
     spark.stop()
-    import bench  # host canary: cross-round drift normalization
-
     out = {
         "metric": "memory_rehearsal" + (f"_{skew}" if skew else ""),
         "master": MASTER,
-        "loadavg": [round(v, 2) for v in os.getloadavg()],
-        "canary": bench.host_canary(),
         "factor": factor,
         "skew": skew,
         **({"aqe_skew_join": aqe_probe} if aqe_probe is not None else {}),
@@ -221,11 +222,7 @@ def main() -> None:
         "skipped": SKIP,
         "violations": violations,
     }
-    line = json.dumps(out)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as fh:
-            fh.write(line + "\n")
+    bench.emit(out, out_path)
     if violations and do_assert:
         print("memory rehearsal FAILED:\n  " + "\n  ".join(violations),
               file=sys.stderr)

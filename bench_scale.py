@@ -14,10 +14,10 @@ one round late.
 
 Usage:
   python bench_scale.py                       # generate + run + assert
-  python bench_scale.py --factor 10 --runs 2 --out BENCH_SCALE_r04.json
+  python bench_scale.py --factor 10 --runs 2 --out artifacts/BENCH_SCALE.json
   python bench_scale.py --no-assert           # measure only
 
-Env: $SPARK_GRAFT_SF_DIR     base corpus   (default /root/testdata/sf0.1)
+Env: $SPARK_GRAFT_SF_DIR     base corpus   (default catalog.DEFAULT_SF_DIR)
      $SPARK_GRAFT_SCALE_DIR  scaled corpus (default /tmp/ddspark-scale/f<factor>)
 
 Prints ONE JSON line:
@@ -36,14 +36,14 @@ so a reader can see what was not measured.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from datafusion_dist_spark import registry
+import bench
+from datafusion_dist_spark.catalog import DEFAULT_SF_DIR
 from datafusion_dist_spark.scale import scale_corpus
 from datafusion_dist_spark.session import build_session
 
@@ -295,10 +295,6 @@ EXCLUDED: dict[str, str] = {
 DEFAULT_BUDGET_PER_FACTOR = 1.2  # 12x at factor 10
 
 
-def run_query(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
-
-
 def measure_ivf_prebuilt(
     spark, base_dir: str, scale_dir: str, factor: int, runs: int
 ) -> dict[str, dict]:
@@ -341,7 +337,7 @@ def measure_ivf_prebuilt(
         qs = emb.filter(F.col("vec_id") % 40 == 0)
         for _ in range(runs):
             t0 = time.perf_counter()
-            run_query(
+            bench.run_query(
                 similarity.ivf_knn_join_prebuilt(spark, path, qs, k=5, nprobe=2)
             )
             tq = min(tq, time.perf_counter() - t0)
@@ -436,7 +432,7 @@ def main() -> None:
         else:
             raise SystemExit(f"unknown argument {a!r}")
 
-    base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    base_dir = DEFAULT_SF_DIR
     suffix = f"-{skew}" if skew else ""
     scale_dir = os.environ.get(
         "SPARK_GRAFT_SCALE_DIR", f"/tmp/ddspark-scale/f{factor}{suffix}"
@@ -450,11 +446,8 @@ def main() -> None:
     manifest = scale_corpus(base_dir, scale_dir, factor, skew=skew)
     print(f"corpus ready in {time.perf_counter() - t0:.1f}s", file=sys.stderr)
 
-    import bench  # warmup + data_hashes
-
     spark = build_session("ddspark-bench-scale")
     bench.warmup(spark, base_dir)
-    specs = registry.all_specs()
     budgets = SKEW_QUERIES if skew else SCALE_QUERIES
     names = [n for n in budgets if only is None or n in only]
     for name, why in EXCLUDED.items():
@@ -463,18 +456,10 @@ def main() -> None:
     results: dict[str, dict] = {}
     violations: list[str] = []
     for name in names:
-        fn = specs[name].spark_fn
         power, coeff = budgets[name] or (1.0, DEFAULT_BUDGET_PER_FACTOR)
         budget = coeff * factor**power
-        tb = ts = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            run_query(fn(spark, base_dir))
-            tb = min(tb, time.perf_counter() - t0)
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            run_query(fn(spark, scale_dir))
-            ts = min(ts, time.perf_counter() - t0)
+        tb = min(bench.time_entry(spark, name, base_dir, runs))
+        ts = min(bench.time_entry(spark, name, scale_dir, runs))
         ratio = round(ts / tb, 2) if tb > 0 else float("inf")
         ok = ratio <= budget
         results[name] = {
@@ -533,17 +518,8 @@ def main() -> None:
         "excluded": EXCLUDED,
         "violations": violations,
         "base_data_hashes": manifest["source"],
-        # Host throughput probes (bench.host_canary): divide cross-round
-        # wall drift by the canary ratio before reading it as a code
-        # change — VERDICT r8 task 3.
-        "loadavg": [round(v, 2) for v in os.getloadavg()],
-        "canary": bench.host_canary(),
     }
-    line = json.dumps(out)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as fh:
-            fh.write(line + "\n")
+    bench.emit(out, out_path)
     if violations and do_assert:
         print("scale budget FAILED:\n  " + "\n  ".join(violations), file=sys.stderr)
         raise SystemExit(1)

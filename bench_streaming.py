@@ -64,12 +64,11 @@ the inline union twin exactly (first/middle/last).
 Usage:
   python bench_streaming.py [--factor 10] [--batches 3]
                             [--append-batches 10]
-                            [--out BENCH_STREAMING_r06.json]
+                            [--out artifacts/BENCH_STREAMING.json]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
@@ -79,7 +78,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
-from datafusion_dist_spark.catalog import load_table
+import bench
+from datafusion_dist_spark.catalog import DEFAULT_SF_DIR, load_table
 from datafusion_dist_spark.operators import dedup
 from datafusion_dist_spark.scale import scale_corpus
 from datafusion_dist_spark.session import build_session
@@ -121,10 +121,7 @@ def measure(spark, sf_dir: str, work_dir: str, n_batches: int) -> dict:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     index = docs  # the whole corpus is the index
     drops = _crawl_drops(
-        load_table(
-            spark, os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-            "documents",
-        ).select("doc_id", "text"),
+        load_table(spark, DEFAULT_SF_DIR, "documents").select("doc_id", "text"),
         n_batches,
     )
     out: dict = {}
@@ -396,10 +393,7 @@ def measure_append(
     repeats the same base texts under fresh ids."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     drops = _crawl_drops(
-        load_table(
-            spark, os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-            "documents",
-        ).select("doc_id", "text"),
+        load_table(spark, DEFAULT_SF_DIR, "documents").select("doc_id", "text"),
         n_batches,
     )
     index_path = os.path.join(work_dir, "mh-index-append")
@@ -473,7 +467,7 @@ def main() -> None:
         else:
             raise SystemExit(f"unknown argument {a!r}")
 
-    base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    base_dir = DEFAULT_SF_DIR
     scale_dir = os.environ.get(
         "SPARK_GRAFT_SCALE_DIR", f"/tmp/ddspark-scale/f{factor}"
     )
@@ -481,8 +475,6 @@ def main() -> None:
     work = "/tmp/ddspark-scale/streaming"
     spark = build_session("ddspark-bench-streaming")
     register_sources(spark)
-    import bench
-
     bench.warmup(spark, base_dir)
 
     base = measure(spark, base_dir, os.path.join(work, "base"), n_batches)
@@ -662,17 +654,8 @@ def main() -> None:
             else float("inf"),
         },
         "violations": violations,
-        # Host throughput probes (bench.host_canary): divide cross-round
-        # wall drift by the canary ratio before reading it as a code
-        # change — VERDICT r8 task 3.
-        "loadavg": [round(v, 2) for v in os.getloadavg()],
-        "canary": bench.host_canary(),
     }
-    line = json.dumps(result)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as fh:
-            fh.write(line + "\n")
+    bench.emit(result, out_path)
     if violations:
         print("streaming budget FAILED", file=sys.stderr)
         raise SystemExit(1)

@@ -393,7 +393,10 @@ def _numpy_dyn_scorer():
     csims by construction (asserted by
     test_kmeans_fused_rounds_bit_identical). Returns the csims array
     aligned with the codebook's array order (callers zip it with
-    ``transform(cb, s -> s.cid)`` for the argmax)."""
+    ``transform(cb, s -> s.cid)`` for the argmax). The codebook column
+    copies K×dim doubles onto every row, which stays small only because
+    its one caller fixes K=8 (``kmeans_train`` from
+    ``queries/llm.py:ann_kmeans_converged``)."""
     import numpy as np
 
     @F.pandas_udf("array<double>")

@@ -87,19 +87,6 @@ def build_session(
         builder = builder.config(
             "spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"]
         )
-    # Scan-split sizing. Production default (128 MB) is right at 100 TB
-    # where any table is thousands of splits; the LOCAL rehearsal
-    # corpora are single compact parquet files, so a CPU-heavy
-    # predicate pushed into the scan runs on ONE core no matter the
-    # master (r5 cores gate: pipeline_clean_corpus "anti-scaled"
-    # because its pushed-down quality filter was split-bound, not
-    # serialized). Harnesses that measure core scaling size this to
-    # the corpus (bench_cores); everything else keeps the default.
-    mpb = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-    if mpb:
-        builder = builder.config(
-            "spark.sql.files.maxPartitionBytes", mpb
-        ).config("spark.sql.files.openCostInBytes", "262144")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
 

@@ -2,7 +2,22 @@
 
 from __future__ import annotations
 
+import importlib
+import pathlib
+
+import pytest
+
 import __spark_entry__ as entrymod
+
+_ROOT = pathlib.Path(__file__).resolve().parent.parent
+# Every root harness module; tools_driver_sim runs its sweep on import
+# by design and is the one exception.
+_HARNESSES = sorted(
+    p.stem
+    for pattern in ("bench*.py", "tools_*.py")
+    for p in _ROOT.glob(pattern)
+    if p.stem != "tools_driver_sim"
+)
 
 
 def test_queries_and_oracles_consistent():
@@ -207,3 +222,12 @@ def test_driver_sample_window_is_never_sampled_first():
     here = registry._interleaved_order(raw, registry.ROTATION_EPOCH)
     next_round = registry._interleaved_order(raw, registry.ROTATION_EPOCH + 1)
     assert set(here) == set(next_round) == set(names)
+
+
+@pytest.mark.parametrize("module", _HARNESSES)
+def test_root_harness_imports_with_main(module):
+    """Every root harness imports cleanly and exposes a callable
+    ``main``: most of them are run by no test, so a broken import in
+    the shared base would otherwise go unnoticed."""
+    mod = importlib.import_module(module)
+    assert callable(getattr(mod, "main", None))

@@ -19,10 +19,10 @@ estimates the quiet-host cost, so give BOTH sides comparable quiet
 coverage (the per-run canaries in the record let a reader audit that)
 — extra samples on one side can only lower that side's min.
 
-    python tools_f3_compare.py --prev-label r11@c756874 \
-        --out BENCH_F3_COMPARE_r12.json \
-        --prev /tmp/f3_r11.jsonl /tmp/f3_r11b.jsonl \
-        --now /tmp/f3_r12.jsonl
+    python tools_f3_compare.py --prev-label prev@<commit> \
+        --out artifacts/BENCH_F3_COMPARE.json \
+        --prev /tmp/f3_prev.jsonl /tmp/f3_prev_b.jsonl \
+        --now /tmp/f3_now.jsonl
 """
 from __future__ import annotations
 
@@ -104,7 +104,7 @@ def main() -> None:
     argv = sys.argv[1:]
     prev_paths: list[str] = []
     now_paths: list[str] = []
-    out_path = "BENCH_F3_COMPARE.json"
+    out_path = "artifacts/BENCH_F3_COMPARE.json"
     prev_label = "prev"
     cur = None
     while argv:

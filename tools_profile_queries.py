@@ -18,6 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import bench
 from datafusion_dist_spark import registry
+from datafusion_dist_spark.catalog import DEFAULT_SF_DIR
 from datafusion_dist_spark.plans import executed_scan_facts
 from datafusion_dist_spark.session import build_session
 
@@ -40,7 +41,7 @@ def main() -> None:
         runs = int(argv[1])
         argv = argv[2:]
     names = argv or list(bench.HEADLINE)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     spark = build_session("ddspark-profile")
     bench.warmup(spark, sf_dir)
     specs = registry.all_specs()

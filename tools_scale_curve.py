@@ -1,7 +1,8 @@
 """Two-point scaling-exponent analysis over bench_scale artifacts.
 
 Reads two BENCH_SCALE JSONs at different factors (default: the
-committed factor-3 and factor-10 round artifacts) and prints, per
+committed artifacts/BENCH_SCALE_F3.json and artifacts/BENCH_SCALE.json,
+factors 3 and 10) and prints, per
 query, the fitted power-law exponent
 
     p = log(ratio_hi / ratio_lo) / log(factor_hi / factor_lo)
@@ -28,7 +29,7 @@ def main() -> None:
     lo_path, hi_path = (
         sys.argv[1:3]
         if len(sys.argv) >= 3
-        else ("BENCH_SCALE_F3_r11.json", "BENCH_SCALE_r11.json")
+        else ("artifacts/BENCH_SCALE_F3.json", "artifacts/BENCH_SCALE.json")
     )
     lo, hi = json.load(open(lo_path)), json.load(open(hi_path))
     flo, fhi = lo["factor"], hi["factor"]

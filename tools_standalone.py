@@ -19,18 +19,36 @@ processes. This module closes that last shape gap the sandbox allows:
   PYTHONPATH to executor Python workers for non-local masters).
 
 Used by ``tests/test_standalone.py`` (correctness + executor-kill on
-the standalone shape) and ``bench_standalone.py`` (walls vs
-local-cluster). Daemons bind real TCP ports; callers must tolerate a
-sandbox that forbids binding by skipping (the test does).
+the standalone shape). Daemons bind real TCP ports; callers must
+tolerate a sandbox that forbids binding by skipping (the test does).
+
+Run as a script it is the deployment-shape overhead bench: the same
+resource envelope on both shapes — 2 executors x 4 cores x 4 GiB —
+the only difference being WHERE the cluster manager lives (these
+daemons over ``spark://`` versus ``local-cluster[2,4,4096]``'s
+in-driver master). Per-query walls should be near parity: the
+deployment layer sits on the control plane (executor launch,
+heartbeats), not in the task hot path. A query whose standalone wall
+exceeds ``VIOLATION_RATIO`` x the local-cluster wall (above the
+scheduling-noise floor) is a violation — it would mean the engine
+accidentally depends on in-process-master behavior. Each shape runs
+in its own subprocess (one SparkContext per process), min-of-``--runs``
+after bench.warmup::
+
+    python tools_standalone.py [--runs 2] [--out artifacts/BENCH_STANDALONE.json]
 """
 
 from __future__ import annotations
 
+import argparse
+import json
 import os
 import socket
 import subprocess
 import sys
 import time
+
+REPO = os.path.dirname(os.path.abspath(__file__))
 
 SPARK_BIN = os.path.join(
     os.path.dirname(os.path.abspath(__import__("pyspark").__file__)), "bin"
@@ -188,21 +206,115 @@ def session_env(repo: str, master_url: str, **extra: str) -> dict:
     return env
 
 
+# Heavy-ish slice across the engine's plan shapes: scan+agg, shuffle
+# join, banded-LSH dedup (python workers + shuffle), clustered
+# embedding scorer (applyInPandas), inverted-index text scoring,
+# iterated graph joins.
+ENTRIES = [
+    "tpch_q1",
+    "tpch_q5",
+    "dedup_minhash_lsh_capped",
+    "dedup_semantic_adaptive",
+    "text_tfidf_topk",
+    "graph_triangle_count",
+]
+
+VIOLATION_RATIO = 1.5
+MIN_WALL = 2.0  # below this, walls are scheduling noise on both shapes
+
+_CHILD = r"""
+import json, os, sys
+import bench
+from datafusion_dist_spark.session import build_session
+
+sf_dir = os.environ["DDSPARK_SF_DIR"]
+runs = int(os.environ["DDSPARK_RUNS"])
+spark = build_session(
+    "bench-standalone",
+    shuffle_partitions=8,
+    extra_conf={"spark.executor.memory": "2g"},
+)
+bench.warmup(spark, sf_dir)
+walls = {}
+for name in os.environ["DDSPARK_ENTRIES"].split(","):
+    walls[name] = round(min(bench.time_entry(spark, name, sf_dir, runs)), 3)
+    print(f"  {name}: {walls[name]}s", file=sys.stderr, flush=True)
+print("CHILD_WALLS " + json.dumps(walls))
+spark.stop()
+"""
+
+
+def run_shape(master_url: str, sf_dir: str, runs: int) -> dict[str, float]:
+    proc = subprocess.run(
+        [sys.executable, "-c", _CHILD],
+        capture_output=True,
+        text=True,
+        timeout=1800,
+        env=session_env(
+            REPO,
+            master_url,
+            DDSPARK_SF_DIR=sf_dir,
+            DDSPARK_RUNS=str(runs),
+            DDSPARK_ENTRIES=",".join(ENTRIES),
+        ),
+        cwd=REPO,
+    )
+    for line in proc.stdout.splitlines():
+        if line.startswith("CHILD_WALLS "):
+            return json.loads(line[len("CHILD_WALLS "):])
+    raise RuntimeError(
+        f"child produced no walls (master={master_url}):\n"
+        f"{proc.stdout[-2000:]}\n{proc.stderr[-2000:]}"
+    )
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--runs", type=int, default=2)
+    ap.add_argument("--out", default=None)
+    args = ap.parse_args()
+
+    import bench
+    from datafusion_dist_spark.catalog import DEFAULT_SF_DIR
+
+    t0 = time.time()
+    with StandaloneCluster(
+        "/tmp/ddspark-standalone-bench", workers=2, cores=4, mem="4g"
+    ) as c:
+        print(f"standalone cluster up at {c.master_url}", file=sys.stderr)
+        sa = run_shape(c.master_url, DEFAULT_SF_DIR, args.runs)
+    lc = run_shape("local-cluster[2,4,4096]", DEFAULT_SF_DIR, args.runs)
+
+    queries, violations = {}, []
+    for name in ENTRIES:
+        ratio = round(sa[name] / lc[name], 2) if lc[name] else None
+        queries[name] = {
+            "standalone_sec": sa[name],
+            "local_cluster_sec": lc[name],
+            "ratio": ratio,
+        }
+        if (
+            ratio is not None
+            and ratio > VIOLATION_RATIO
+            and max(sa[name], lc[name]) >= MIN_WALL
+        ):
+            violations.append({"query": name, "ratio": ratio})
+    result = {
+        "metric": "standalone_vs_local_cluster",
+        "sf_dir": DEFAULT_SF_DIR,
+        "runs_per_query": args.runs,
+        "topology": "2 workers x 4 cores x 4g (both shapes)",
+        "queries": queries,
+        "violation_ratio": VIOLATION_RATIO,
+        "min_wall_gate_sec": MIN_WALL,
+        "violations": violations,
+        "wall_total_sec": round(time.time() - t0, 1),
+    }
+    bench.emit(result, args.out)
+    if violations:
+        print("standalone parity gate FAILED", file=sys.stderr)
+        raise SystemExit(1)
+
+
 if __name__ == "__main__":
-    # Smoke: bring the cluster up, run one aggregate, tear down.
-    repo = os.path.dirname(os.path.abspath(__file__))
-    with StandaloneCluster("/tmp/ddspark-standalone-smoke") as c:
-        print(f"cluster up at {c.master_url}")
-        code = subprocess.run(
-            [
-                sys.executable,
-                "-c",
-                "import sys, os; sys.path.insert(0, os.environ['PYTHONPATH'])\n"
-                "from datafusion_dist_spark.session import build_session\n"
-                "s = build_session('sa-smoke', shuffle_partitions=8,\n"
-                "    extra_conf={'spark.executor.memory': '2g'})\n"
-                "print('count:', s.range(1000).count()); s.stop()",
-            ],
-            env=session_env(repo, c.master_url),
-        ).returncode
-        print("smoke exit", code)
+    main()
