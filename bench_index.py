@@ -135,13 +135,19 @@ def main() -> None:
     )
     batch.count()  # session + parquet-footer warmup
 
+    def lookup(path: str, prune) -> None:
+        dedup.minhash_dedup_pairs_prebuilt(
+            spark, path, batch, split_id=50_000_000, prune=prune
+        ).collect()
+
     def lookup_wall(path: str, prune) -> float:
+        # One untimed lookup first: the first read of a layout pays its
+        # file listing and footer reads and the plan's codegen.
+        lookup(path, prune)
         best = None
         for _ in range(args.runs):
             t = time.time()
-            dedup.minhash_dedup_pairs_prebuilt(
-                spark, path, batch, split_id=50_000_000, prune=prune
-            ).collect()
+            lookup(path, prune)
             w = time.time() - t
             best = w if best is None else min(best, w)
         return round(best, 3)

@@ -321,21 +321,26 @@ def measure_ivf_prebuilt(
     from datafusion_dist_spark.operators import similarity
 
     phases: dict[str, tuple[float, float]] = {}
-    for tag, d in (("base", base_dir), ("scaled", scale_dir)):
+    # The "warm" pass over the base corpus is discarded: it pays the
+    # first-use costs (Python workers, codegen of these plans) that
+    # would otherwise land in base_sec and bias both ratios low.
+    for tag, d, reps in (
+        ("warm", base_dir, 1), ("base", base_dir, runs), ("scaled", scale_dir, runs)
+    ):
         emb = load_table(spark, d, "embeddings")
         n = emb.count()
         k_centroids = max(8, n // 250)  # the adaptive-K discipline
         path = os.path.join(
             os.path.dirname(scale_dir) or "/tmp/ddspark-scale",
-            f"ivf-index-{tag}",
+            f"ivf-index-{'scaled' if tag == 'scaled' else 'base'}",
         )
         tb = tq = float("inf")
-        for _ in range(runs):
+        for _ in range(reps):
             t0 = time.perf_counter()
             similarity.ivf_index_build(emb, n_centroids=k_centroids, path=path)
             tb = min(tb, time.perf_counter() - t0)
         qs = emb.filter(F.col("vec_id") % 40 == 0)
-        for _ in range(runs):
+        for _ in range(reps):
             t0 = time.perf_counter()
             bench.run_query(
                 similarity.ivf_knn_join_prebuilt(spark, path, qs, k=5, nprobe=2)
@@ -458,6 +463,9 @@ def main() -> None:
     for name in names:
         power, coeff = budgets[name] or (1.0, DEFAULT_BUDGET_PER_FACTOR)
         budget = coeff * factor**power
+        # Untimed first pass: the entry's first-use cost (Python workers,
+        # codegen of its plans) would otherwise land in base_sec.
+        bench.time_entry(spark, name, base_dir, 1)
         tb = min(bench.time_entry(spark, name, base_dir, runs))
         ts = min(bench.time_entry(spark, name, scale_dir, runs))
         ratio = round(ts / tb, 2) if tb > 0 else float("inf")

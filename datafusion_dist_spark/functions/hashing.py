@@ -82,12 +82,6 @@ def hash_int32(value: Column, seed: int | str = 0) -> Column:
     return F.conv(hash_hex(value, seed, 8), 16, 10).cast("bigint")
 
 
-def hash_int32_oracle(value_expr: str, seed: int | str = 0) -> str:
-    # DuckDB parses hex via from_hex → blob; simpler: 8 hex chars fit in
-    # a BIGINT read with a hex format cast.
-    return f"CAST(('0x' || {hash_hex_oracle(value_expr, seed)}) AS BIGINT)"
-
-
 def hash_int60(value: Column, seed: int | str = 0) -> Column:
     """Stable 60-bit unsigned int: 15 hex chars of the md5 — the widest
     hex window whose value stays inside SIGNED BIGINT range on both

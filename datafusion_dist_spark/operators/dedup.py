@@ -101,10 +101,10 @@ _UNSET = object()
 # -- exact ----------------------------------------------------------------
 
 
-def exact_dedup_keep_min(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup_keep_min(docs: DataFrame) -> DataFrame:
     """Exact dedup on content digest; keep the smallest doc_id per
     group. Returns (digest, n_copies, keep_id) for duplicated groups."""
-    digest = F.md5(F.col(text_col)).alias("digest")
+    digest = F.md5(F.col("text")).alias("digest")
     return (
         docs.select(digest, "doc_id")
         .groupBy("digest")
@@ -127,12 +127,12 @@ def normalized_text_oracle(text_expr: str) -> str:
     return f"trim(regexp_replace(lower({text_expr}), '[^a-z0-9]+', ' ', 'g'))"
 
 
-def exact_dedup_normalized(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def exact_dedup_normalized(docs: DataFrame) -> DataFrame:
     """Normalized-exact ("fuzzy exact") dedup: digest the normalized
     text instead of the raw bytes. Same single-shuffle plan shape as
     ``exact_dedup_keep_min`` — the normalization is a codegen'd
     projection on the scan; only (digest, doc_id) is shuffled."""
-    digest = F.md5(normalized_text(F.col(text_col))).alias("digest")
+    digest = F.md5(normalized_text(F.col("text"))).alias("digest")
     return (
         docs.select(digest, "doc_id")
         .groupBy("digest")
@@ -146,7 +146,6 @@ def exact_dedup_normalized(docs: DataFrame, text_col: str = "text") -> DataFrame
 
 def doc_shingles(
     docs: DataFrame,
-    text_col: str = "text",
     k: int = 3,
     id_alias: str = "doc_id",
     parallelize: bool = True,
@@ -165,7 +164,7 @@ def doc_shingles(
     deliberately tiny sides (e.g. a broadcast benchmark set)."""
     src = spread(docs) if parallelize else docs
     t = src.select(
-        F.col("doc_id").alias(id_alias), tokens(F.col(text_col)).alias("toks")
+        F.col("doc_id").alias(id_alias), tokens(F.col("text")).alias("toks")
     )
     sh = shingle_array(F.col("toks"), k)
     return t.select(id_alias, F.explode(F.array_distinct(sh)).alias("shingle"))
@@ -244,31 +243,8 @@ def _banded(signatures: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     ).select("doc_id", "sig", "band.band_id", "band.band_key")
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, bands: int = 4, rows_per_band: int = 4
-) -> DataFrame:
-    """LSH banding: docs sharing any band of the signature become a
-    candidate pair (a_id < b_id). Equi-join on (band_id, band_key),
-    hinted SHUFFLE_HASH so both sides' identical exchanges collapse to
-    one signature computation (ReuseExchange) — see
-    minhash_dedup_pairs."""
-    banded = _banded(signatures, bands, rows_per_band)
-    a, b = banded.alias("a").hint("shuffle_hash"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .distinct()
-    )
-
-
 def minhash_dedup_pairs(
     docs: DataFrame,
-    text_col: str = "text",
     k: int = 3,
     bands: int = 4,
     rows_per_band: int = 4,
@@ -361,7 +337,7 @@ def minhash_dedup_pairs(
             "registry twin dedup_minhash_lsh_capped)",
         )
     num_hashes = bands * rows_per_band
-    sigs = minhash_signatures(doc_shingles(docs, text_col, k), num_hashes)
+    sigs = minhash_signatures(doc_shingles(docs, k), num_hashes)
     banded = _banded(sigs, bands, rows_per_band)
     if bucket_cap == "measured":
         # Measured-cardinality cap selection (VERDICT r10 task 5): one
@@ -464,7 +440,6 @@ def _band_pair_estimates(
 def minhash_index_build(
     docs: DataFrame,
     path: str,
-    text_col: str = "text",
     k: int = 3,
     bands: int = 4,
     rows_per_band: int = 4,
@@ -544,7 +519,7 @@ def minhash_index_build(
         )
     banded = _banded(
         minhash_signatures(
-            doc_shingles(docs, text_col, k), bands * rows_per_band
+            doc_shingles(docs, k), bands * rows_per_band
         ),
         bands,
         rows_per_band,
@@ -603,7 +578,6 @@ def minhash_index_append(
     spark,
     batch: DataFrame,
     path: str,
-    text_col: str = "text",
 ) -> str:
     """Continuous-crawl ingest: sketch ONLY the new batch and APPEND
     its banded signatures to an existing ``minhash_index_build``
@@ -634,7 +608,7 @@ def minhash_index_append(
     band_buckets = stored.get("band_buckets")
     banded = _banded(
         minhash_signatures(
-            doc_shingles(batch, text_col, k), bands * rows_per_band
+            doc_shingles(batch, k), bands * rows_per_band
         ),
         bands,
         rows_per_band,
@@ -822,7 +796,6 @@ def minhash_dedup_pairs_prebuilt(
     index_path: str,
     batch: DataFrame,
     split_id: int,
-    text_col: str = "text",
     k: int | None = None,
     bands: int | None = None,
     rows_per_band: int | None = None,
@@ -891,7 +864,7 @@ def minhash_dedup_pairs_prebuilt(
     )
     num_hashes = bands * rows_per_band
     banded_batch = _banded(
-        minhash_signatures(doc_shingles(batch, text_col, k), num_hashes),
+        minhash_signatures(doc_shingles(batch, k), num_hashes),
         bands,
         rows_per_band,
     )
@@ -997,7 +970,6 @@ def adaptive_simhash_bits(n: int) -> int:
 
 def simhash(
     docs: DataFrame,
-    text_col: str = "text",
     bits: int = 16,
     hash_width: int = 8,
 ) -> DataFrame:
@@ -1015,7 +987,7 @@ def simhash(
         )
     toks = spread(docs).select(
         "doc_id",
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("tok"),
+        F.explode(F.array_distinct(tokens(F.col("text")))).alias("tok"),
     )
     h = F.conv(
         hash_hex(F.col("tok"), seed="sim", width=hash_width), 16, 10
@@ -1086,7 +1058,6 @@ def simhash_hamming_pairs(
 
 def _ngram_pair_counts(
     docs: DataFrame,
-    text_col: str,
     k: int,
     max_list_len: int | None,
 ) -> DataFrame:
@@ -1122,7 +1093,7 @@ def _ngram_pair_counts(
     # Carry each doc's shingle-set size on its shingle rows (one window
     # -free groupBy-join collapsed into the explode) so the pair
     # aggregation needs no extra join against a sizes table.
-    t = spread(docs).select("doc_id", tokens(F.col(text_col)).alias("toks"))
+    t = spread(docs).select("doc_id", tokens(F.col("text")).alias("toks"))
     sh = shingle_array(F.col("toks"), k)
     shingles = t.select(
         "doc_id", F.array_distinct(sh).alias("shs")
@@ -1169,7 +1140,6 @@ def _pair_counts_from_shingles(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    text_col: str = "text",
     k: int = 3,
     threshold: float = 0.5,
     max_list_len: int | None = DEFAULT_MAX_LIST_LEN,
@@ -1182,7 +1152,7 @@ def ngram_jaccard_pairs(
     ``_ngram_pair_counts`` for the plan and the ``max_list_len`` skew
     guard.
     """
-    inter = _ngram_pair_counts(docs, text_col, k, max_list_len)
+    inter = _ngram_pair_counts(docs, k, max_list_len)
     jac = F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))
     return (
         inter.select("a_id", "b_id", F.round(jac, 6).alias("jaccard"))
@@ -1192,7 +1162,6 @@ def ngram_jaccard_pairs(
 
 def ngram_containment_pairs(
     docs: DataFrame,
-    text_col: str = "text",
     k: int = 3,
     threshold: float = 0.8,
     max_list_len: int | None = DEFAULT_MAX_LIST_LEN,
@@ -1206,7 +1175,7 @@ def ngram_containment_pairs(
     only the final score differs, and its inputs are exact integers,
     so the division is bit-deterministic cross-engine.
     """
-    inter = _ngram_pair_counts(docs, text_col, k, max_list_len)
+    inter = _ngram_pair_counts(docs, k, max_list_len)
     cont = F.col("n_inter") / F.least(F.col("na"), F.col("nb"))
     return (
         inter.select("a_id", "b_id", F.round(cont, 6).alias("containment"))
@@ -1216,7 +1185,6 @@ def ngram_containment_pairs(
 
 def substring_span_pairs(
     docs: DataFrame,
-    text_col: str = "text",
     span_chars: int = 24,
     min_shared: int = 2,
     max_list_len: int | None = DEFAULT_MAX_LIST_LEN,
@@ -1252,7 +1220,7 @@ def substring_span_pairs(
             "the uncapped char-span pair listing (max_list_len=None)",
             "the default capped form (max_list_len=DEFAULT_MAX_LIST_LEN)",
         )
-    grams = char_ngrams(text_col, span_chars)
+    grams = char_ngrams("text", span_chars)
     shingles = (
         spread(docs)
         .select("doc_id", F.array_distinct(grams).alias("shs"))
@@ -1352,13 +1320,4 @@ def duplicate_clusters(
     raise RuntimeError(
         f"duplicate_clusters did not converge in {max_iters} rounds; "
         "raise max_iters (component diameter exceeds 2^max_iters)"
-    )
-
-
-def cluster_summary(clusters: DataFrame) -> DataFrame:
-    """Per-cluster size + canonical keep id (== cluster_id, the min)."""
-    return (
-        clusters.groupBy("cluster_id")
-        .agg(F.count("*").alias("n_members"))
-        .withColumn("keep_id", F.col("cluster_id"))
     )

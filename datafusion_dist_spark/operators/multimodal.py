@@ -43,10 +43,10 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def attach_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_payload(docs: DataFrame) -> DataFrame:
     """Model a multimodal table: utf-8 bytes of ``text`` stand in for an
     opaque media payload, with typed metadata columns alongside."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return docs.select(
         "doc_id",
         payload.alias("payload"),

@@ -187,15 +187,13 @@ def temperature_sample_oracle(
 
 def importance_weights_dsir(
     docs: DataFrame,
-    text_col: str = "text",
-    flag_col: str = "lang",
     target_value: str = "en",
     n_buckets: int = 1024,
     seed: int | str = "dsir",
 ) -> DataFrame:
     """DSIR-style importance weights: score each doc by the hashed-unigram
     log-likelihood ratio of a target distribution (rows where
-    ``flag_col == target_value``) vs the whole corpus — the
+    ``lang == target_value``) vs the whole corpus — the
     data-selection scorer for pretraining mixtures (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling";
     public method).
@@ -212,8 +210,8 @@ def importance_weights_dsir(
         "doc_id",
         # when/otherwise, not a bare boolean cast: NULL flag must score
         # as non-target (0), matching SQL CASE ... ELSE 0.
-        F.when(F.col(flag_col) == target_value, 1).otherwise(0).alias("is_t"),
-        F.explode(tokens(F.col(text_col))).alias("tok"),
+        F.when(F.col("lang") == target_value, 1).otherwise(0).alias("is_t"),
+        F.explode(tokens(F.col("text"))).alias("tok"),
     )
     # Count per (doc, token) BEFORE hashing: the partial aggregation
     # combines repeated tokens map-side (~6x fewer shuffled rows on

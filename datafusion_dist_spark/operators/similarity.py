@@ -38,6 +38,11 @@ from datafusion_dist_spark.operators.common import (
     spread,
 )
 
+# Fixed-point scale of the k-means and PQ operators: components are
+# quantized to round(x * MICRO) BIGINT units so sums are exact integers.
+# The DuckDB oracle twins hard-code the same 1000000.
+MICRO = 1_000_000
+
 
 def _dot_fold(a: Column, b: Column) -> Column:
     """Interpreted fallback when the dimension is unknown."""
@@ -113,18 +118,16 @@ def cosine_topk_bruteforce(
     embeddings: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine against a literal query vector. The
     query-side norm is a foldable expression Catalyst evaluates once."""
     dim = len(query_vec)
     q = [float(v) for v in query_vec]
     scored = spread(embeddings).select(
-        F.col(id_col),
-        F.round(cosine(vec_col, q, dim), 6).alias("score"),
+        F.col("vec_id"),
+        F.round(cosine("embedding", q, dim), 6).alias("score"),
     )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("score").desc(), F.col("vec_id").asc()).limit(k)
 
 
 # Corpus-tracking knob ladders — THE DEFAULTS for the blocked
@@ -181,8 +184,6 @@ def lsh_bucket_topk(
     query_vec: list[float],
     k: int = 10,
     nbits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: probe the query's sign bucket plus all buckets
     at Hamming distance 1 (multi-probe), exact cosine within probes."""
@@ -194,22 +195,20 @@ def lsh_bucket_topk(
     probes = [q_bucket] + [q_bucket ^ (1 << i) for i in range(nbits)]
     q = [float(v) for v in query_vec]
     scored = (
-        spread(embeddings).withColumn("bucket", sign_bucket(F.col(vec_col), nbits))
+        spread(embeddings).withColumn("bucket", sign_bucket(F.col("embedding"), nbits))
         .filter(F.col("bucket").isin(probes))
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.col("bucket"),
-            F.round(cosine(vec_col, q, dim), 6).alias("score"),
+            F.round(cosine("embedding", q, dim), 6).alias("score"),
         )
     )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("score").desc(), F.col("vec_id").asc()).limit(k)
 
 
 def ivf_assignments(
     embeddings: DataFrame,
     n_centroids: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: assign every vector to its nearest
@@ -239,9 +238,9 @@ def ivf_assignments(
     if dim is None:
         # Empty table → no rows will evaluate; 1 keeps the generated
         # SQL valid instead of raising TypeError in _dot_sql.
-        dim = _probe_dim(embeddings, vec_col) or 1
-    cents = embeddings.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")
+        dim = _probe_dim(embeddings, "embedding") or 1
+    cents = embeddings.filter(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
     )
     cent_rows = cents.collect()
     if not cent_rows:
@@ -249,27 +248,27 @@ def ivf_assignments(
         # an empty result with the output schema, not a type error
         # from array_max(array()).
         empty = embeddings.filter(F.lit(False)).select(
-            id_col,
-            vec_col,
+            "vec_id",
+            "embedding",
             F.lit(None).cast("double").alias("_norm"),
             F.lit(None).cast("bigint").alias("cid"),
             F.lit(None).cast("double").alias("csim"),
         )
         return empty, cents
     normed = spread(embeddings).select(
-        id_col,
-        vec_col,
-        F.expr(f"CAST({vec_col} AS ARRAY<DOUBLE>)").alias("_vd"),
+        "vec_id",
+        "embedding",
+        F.expr("CAST(embedding AS ARRAY<DOUBLE>)").alias("_vd"),
     ).select(
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         "_vd",
         F.expr(f"sqrt({_dot_sql('@_vd', '@_vd', dim)})").alias("_norm"),
     )
     best = _best_centroid(cent_rows, "@_vd", "_norm", dim)
     assigned = normed.select(
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         "_norm",
         (-best["ncid"]).alias("cid"),
         best["csim"].alias("csim"),
@@ -437,9 +436,6 @@ def _rounded_argmax_cid(cent_rows, csims_ref: str = "s.csims"):
 def kmeans_refine_step(
     embeddings: DataFrame,
     n_centroids: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    micro: int = 1_000_000,
     codebook: list | None = None,
 ) -> DataFrame:
     """One Lloyd iteration of codebook training, distributed and
@@ -479,8 +475,8 @@ def kmeans_refine_step(
         cent_rows = [_C(int(c), list(v)) for c, v in codebook]
     else:
         cent_rows = (
-            embeddings.filter(F.col(id_col) < n_centroids)
-            .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+            embeddings.filter(F.col("vec_id") < n_centroids)
+            .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
             .collect()
         )
     if not cent_rows:
@@ -501,12 +497,20 @@ def kmeans_refine_step(
     # parallelism; spread() skips itself when the input is already
     # parallel (the 100 TB case), so only under-parallel inputs pay.
     assigned = spread(embeddings).select(
-        F.col(vec_col), scorer(F.col(vec_col)).alias("s")
+        F.col("embedding"), scorer(F.col("embedding")).alias("s")
     ).select(
         _rounded_argmax_cid(cent_rows).alias("cid"),
-        F.posexplode(vec_col).alias("i", "x"),
+        F.posexplode("embedding").alias("i", "x"),
     )
-    m = F.round(F.col("x").cast("double") * micro).cast("bigint")
+    return _fixed_point_means(assigned)
+
+
+def _fixed_point_means(assigned: DataFrame) -> DataFrame:
+    """The Lloyd update shared by both refine rounds: (cid, i, x) rows —
+    each vector component ``x`` at 0-based position ``i`` under its
+    assigned ``cid`` — to (cid, dim, centroid, n_members), components
+    summed as integer MICRO-units and divided once."""
+    m = F.round(F.col("x").cast("double") * MICRO).cast("bigint")
     return (
         assigned.select("cid", (F.col("i") + 1).alias("dim"), m.alias("m"))
         .groupBy("cid", "dim")
@@ -515,7 +519,7 @@ def kmeans_refine_step(
             "cid",
             "dim",
             F.round(
-                F.col("sm").cast("double") / (F.col("n_members") * float(micro)),
+                F.col("sm").cast("double") / (F.col("n_members") * float(MICRO)),
                 6,
             ).alias("centroid"),
             "n_members",
@@ -523,18 +527,24 @@ def kmeans_refine_step(
     )
 
 
-def collect_codebook(refined: DataFrame) -> list[tuple[int, list[float]]]:
-    """Materialize a :func:`kmeans_refine_step` result as the
-    [(cid, vector), ...] codebook that parameterizes the next round —
-    the only thing that ever crosses the driver between iterations
-    (K×dim rounded doubles, never data)."""
+def _codebook_from_rows(rows) -> list[tuple[int, list[float]]]:
+    """(cid, dim, centroid) rows → [(cid, vector), ...] sorted by cid,
+    each vector ordered by dim."""
     by_cid: dict[int, dict[int, float]] = {}
-    for row in refined.collect():
+    for row in rows:
         by_cid.setdefault(int(row.cid), {})[int(row.dim)] = float(row.centroid)
     return [
         (cid, [dims[d] for d in sorted(dims)])
         for cid, dims in sorted(by_cid.items())
     ]
+
+
+def collect_codebook(refined: DataFrame) -> list[tuple[int, list[float]]]:
+    """Materialize a :func:`kmeans_refine_step` result as the
+    [(cid, vector), ...] codebook that parameterizes the next round —
+    the only thing that ever crosses the driver between iterations
+    (K×dim rounded doubles, never data)."""
+    return _codebook_from_rows(refined.collect())
 
 
 def _codebook_array(refined: DataFrame) -> DataFrame:
@@ -560,9 +570,7 @@ def _codebook_array(refined: DataFrame) -> DataFrame:
     )
 
 
-def _kmeans_refine_dyn(
-    vecs: DataFrame, cb: DataFrame, vec_col: str, micro: int = 1_000_000
-) -> DataFrame:
+def _kmeans_refine_dyn(vecs: DataFrame, cb: DataFrame) -> DataFrame:
     """One Lloyd round whose codebook is a tiny 1-row array RELATION
     (``cb``: array<struct<cid, cvec>> sorted by cid) — the previous
     round's in-plan output — instead of driver-side literals: the
@@ -582,30 +590,16 @@ def _kmeans_refine_dyn(
     assigned = (
         vecs.crossJoin(F.broadcast(cb))
         .select(
-            F.col(vec_col),
+            F.col("embedding"),
             F.expr("transform(cb, s -> s.cid)").alias("ccids"),
-            scorer(F.col(vec_col), F.col("cb")).alias("csims"),
+            scorer(F.col("embedding"), F.col("cb")).alias("csims"),
         )
         .select(
             F.coalesce(-best["ncid"], F.lit(-1).cast("bigint")).alias("cid"),
-            F.posexplode(vec_col).alias("i", "x"),
+            F.posexplode("embedding").alias("i", "x"),
         )
     )
-    m = F.round(F.col("x").cast("double") * micro).cast("bigint")
-    return (
-        assigned.select("cid", (F.col("i") + 1).alias("dim"), m.alias("m"))
-        .groupBy("cid", "dim")
-        .agg(F.sum("m").alias("sm"), F.count("*").alias("n_members"))
-        .select(
-            "cid",
-            "dim",
-            F.round(
-                F.col("sm").cast("double") / (F.col("n_members") * float(micro)),
-                6,
-            ).alias("centroid"),
-            "n_members",
-        )
-    )
+    return _fixed_point_means(assigned)
 
 
 def _collect_codebook_batch(
@@ -613,8 +607,6 @@ def _collect_codebook_batch(
     param: list | None,
     n_rounds: int,
     n_centroids: int,
-    id_col: str,
-    vec_col: str,
 ) -> list[list[tuple[int, list[float]]]]:
     """Run ``n_rounds`` Lloyd rounds in ONE action and return their
     codebooks in order. Round A is the literal-codebook
@@ -636,30 +628,7 @@ def _collect_codebook_batch(
     # ``vecs`` — one cheap job over the cache). An in-plan seed variant
     # (seed agg → broadcast → dynamic round) was measured SLOWER here:
     # it trades one driver-sized collect for two extra AQE stage jobs.
-    out_a = kmeans_refine_step(
-        vecs,
-        n_centroids=n_centroids,
-        codebook=param,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-
-    def _assemble(rows) -> list[list[tuple[int, list[float]]]]:
-        by_round: dict[int, dict[int, dict[int, float]]] = {}
-        for row in rows:
-            by_round.setdefault(int(row.r), {}).setdefault(int(row.cid), {})[
-                int(row.dim)
-            ] = float(row.centroid)
-        out = []
-        for r in range(n_rounds):
-            by_cid = by_round.get(r + 1, {})
-            out.append(
-                [
-                    (cid, [dims[d] for d in sorted(dims)])
-                    for cid, dims in sorted(by_cid.items())
-                ]
-            )
-        return out
+    out_a = kmeans_refine_step(vecs, n_centroids=n_centroids, codebook=param)
 
     outs = [out_a]
     persisted: list[DataFrame] = []
@@ -668,9 +637,7 @@ def _collect_codebook_batch(
             prev = outs[-1].persist()
             persisted.append(prev)
             outs[-1] = prev
-            outs.append(
-                _kmeans_refine_dyn(vecs, _codebook_array(prev), vec_col)
-            )
+            outs.append(_kmeans_refine_dyn(vecs, _codebook_array(prev)))
         tagged = outs[0].select(
             F.lit(1).alias("r"), "cid", "dim", "centroid"
         )
@@ -678,7 +645,11 @@ def _collect_codebook_batch(
             tagged = tagged.unionByName(
                 out.select(F.lit(i).alias("r"), "cid", "dim", "centroid")
             )
-        return _assemble(tagged.collect())
+        rows = tagged.collect()
+        return [
+            _codebook_from_rows([row for row in rows if row.r == r])
+            for r in range(1, n_rounds + 1)
+        ]
     finally:
         for p in persisted:
             p.unpersist()
@@ -688,8 +659,6 @@ def kmeans_train(
     embeddings: DataFrame,
     n_centroids: int = 8,
     max_rounds: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, int]:
     """Lloyd's algorithm to convergence: chain
     :func:`kmeans_refine_step` until the fixed-point codebook stops
@@ -743,7 +712,7 @@ def kmeans_train(
             f"kmeans_train needs max_rounds >= 1, got {max_rounds}"
         )
     vecs = spread(
-        embeddings.select(F.col(id_col), F.col(vec_col))
+        embeddings.select(F.col("vec_id"), F.col("embedding"))
     ).persist()
     # Batched driver protocol (VERDICT r11 task 1): the sequential loop
     # paid one action per round (plus a seed-collect job) and its cost
@@ -776,12 +745,7 @@ def kmeans_train(
         while len(cbs) < max_rounds - 1 and not stopped:
             take = min(_BATCH_ROUNDS, (max_rounds - 1) - len(cbs))
             batch = _collect_codebook_batch(
-                vecs,
-                cbs[-1] if cbs else None,
-                take,
-                n_centroids,
-                id_col,
-                vec_col,
+                vecs, cbs[-1] if cbs else None, take, n_centroids
             )
             for codebook in batch:
                 if cbs and not cbs[-1]:
@@ -795,13 +759,7 @@ def kmeans_train(
     finally:
         vecs.unpersist()
     return (
-        kmeans_refine_step(
-            embeddings,
-            n_centroids=n_centroids,
-            codebook=param,
-            id_col=id_col,
-            vec_col=vec_col,
-        ),
+        kmeans_refine_step(embeddings, n_centroids=n_centroids, codebook=param),
         rounds,
     )
 
@@ -910,8 +868,6 @@ def _coarse_probe(
     query_vec: list[float],
     n_centroids: int,
     nprobe: int,
-    id_col: str,
-    vec_col: str,
 ):
     """Shared IVF coarse-probe machinery: (cent_rows, probes, scorer).
 
@@ -932,7 +888,7 @@ def _coarse_probe(
     """
     spark = embeddings.sparkSession
     cent_rows, probe_cids = _probe_cids(
-        embeddings, query_vec, n_centroids, nprobe, id_col, vec_col
+        embeddings, query_vec, n_centroids, nprobe, "vec_id", "embedding"
     )
     probes = spark.createDataFrame([(c,) for c in probe_cids], "pcid long")
     scorer = _numpy_ivf_scorer(
@@ -950,8 +906,6 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 8,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF top-k: score the query against the codebook, probe the
     ``nprobe`` nearest inverted lists, exact cosine within them.
@@ -969,27 +923,25 @@ def ivf_topk(
     argmax evaluated exactly once per row.
     """
     cent_rows, probes, scorer = _coarse_probe(
-        embeddings, query_vec, n_centroids, nprobe, id_col, vec_col
+        embeddings, query_vec, n_centroids, nprobe
     )
     # No spread: the scorer needs no shuffle at all — numpy work is
     # vectorized per Arrow batch, and the parquet source's natural
     # splits carry the parallelism at scale; a repartition here would
     # add the plan's ONLY exchange before the TopK merge.
-    scored0 = embeddings.select(id_col, scorer(F.col(vec_col)).alias("s"))
+    scored0 = embeddings.select("vec_id", scorer(F.col("embedding")).alias("s"))
     scored = scored0.select(
-        id_col,
+        "vec_id",
         _rounded_argmax_cid(cent_rows).alias("cid"),
         F.round(F.col("s.qscore"), 6).alias("score"),
     ).join(F.broadcast(probes), F.col("cid") == F.col("pcid"), "left_semi")
-    return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("score").desc(), F.col("vec_id").asc()).limit(k)
 
 
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
     nbits: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bucket_cap: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, blocked by sign bucket.
@@ -1059,22 +1011,22 @@ def embedding_near_dup_pairs(
                 "nbits=None (corpus-tracking default; registry twin "
                 "dedup_embedding_cosine_adaptive) or a bucket_cap",
             )
-    dim = _probe_dim(embeddings, vec_col) or 1  # 1: empty-input guard
+    dim = _probe_dim(embeddings, "embedding") or 1  # 1: empty-input guard
     b = spread(embeddings).select(
-        F.col(id_col),
-        F.col(vec_col),
-        sign_bucket(F.col(vec_col), nbits).alias("bucket"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        sign_bucket(F.col("embedding"), nbits).alias("bucket"),
     )
     raw_cut = threshold - 1e-6
     cap = bucket_cap
 
     def _bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
+        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         n = len(pdf)
         if n < 2:
             return pd.DataFrame({"a_id": [], "b_id": [], "score": []})
-        ids = pdf[id_col].to_numpy()
-        V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        ids = pdf["vec_id"].to_numpy()
+        V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         sq = V[:, 0] * V[:, 0]
         for i in range(1, dim):
             sq = sq + V[:, i] * V[:, i]
@@ -1117,11 +1069,7 @@ def embedding_near_dup_pairs(
     ).filter(F.col("cosine") >= threshold)
 
 
-def quantize_int8(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_int8(embeddings: DataFrame) -> DataFrame:
     """Symmetric int8 quantization: per-vector scale = 127 / max|x|,
     q_i = round(x_i * scale). The storage-side optimization of a
     100 TB vector store (4x smaller than float32, dot products stay
@@ -1131,7 +1079,7 @@ def quantize_int8(
     (scale, quantized-value checksum, max reconstruction error) so the
     result is hashable cross-engine.
     """
-    v = F.col(vec_col)
+    v = F.col("embedding")
     max_abs = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
     # Zero vectors get the sentinel scale 0.0 (q_vec all zeros, zero
     # error) — an unguarded 127/0 would make scale Infinity and every
@@ -1149,7 +1097,7 @@ def quantize_int8(
         ),
     ).otherwise(F.lit(0.0))
     return embeddings.select(
-        F.col(id_col),
+        F.col("vec_id"),
         quant.alias("q_vec"),
         F.round(scale, 6).alias("scale"),
         F.aggregate(quant, F.lit(0).cast("bigint"), lambda a, x: a + x).alias(
@@ -1163,8 +1111,6 @@ def knn_join(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """KNN join: for every query vector, its k nearest corpus vectors
     by cosine (self-matches excluded) — the batch primitive behind
@@ -1178,16 +1124,16 @@ def knn_join(
     (ivf_topk, lsh_bucket_topk) and keep this exact join for the
     shortlist — same output contract.
     """
-    dim = _probe_dim(corpus, vec_col) or 1  # 1: empty-input guard
+    dim = _probe_dim(corpus, "embedding") or 1  # 1: empty-input guard
     q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.expr(f"sqrt({_dot_sql(vec_col, vec_col, dim)})").alias("q_norm"),
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_vec"),
+        F.expr(f"sqrt({_dot_sql('embedding', 'embedding', dim)})").alias("q_norm"),
     )
     c = spread(corpus).select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.expr(f"sqrt({_dot_sql(vec_col, vec_col, dim)})").alias("c_norm"),
+        F.col("vec_id").alias("c_id"),
+        F.col("embedding").alias("c_vec"),
+        F.expr(f"sqrt({_dot_sql('embedding', 'embedding', dim)})").alias("c_norm"),
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -1216,8 +1162,6 @@ def semantic_dedup_decisions(
     embeddings: DataFrame,
     n_centroids: int | None = None,
     threshold: float = 0.5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     head_cap: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup: cluster the embedding space,
@@ -1293,15 +1237,15 @@ def semantic_dedup_decisions(
                 "n_centroids=None (corpus-tracking default; registry "
                 "twin dedup_semantic_adaptive) or a head_cap",
             )
-    dim = _probe_dim(embeddings, vec_col) or 1
+    dim = _probe_dim(embeddings, "embedding") or 1
     cent_rows = (
-        embeddings.filter(F.col(id_col) < n_centroids)
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+        embeddings.filter(F.col("vec_id") < n_centroids)
+        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
         .collect()
     )
     if not cent_rows:
         return embeddings.filter(F.lit(False)).select(
-            id_col,
+            "vec_id",
             F.lit(None).cast("bigint").alias("cid"),
             F.lit(None).cast("bigint").alias("dup_of"),
             F.lit(0).cast("bigint").alias("n_dups"),
@@ -1310,10 +1254,10 @@ def semantic_dedup_decisions(
     scorer = _numpy_ivf_scorer(cvecs, [_lit_norm(c) for c in cvecs])
     a = (
         spread(embeddings)
-        .select(id_col, vec_col, scorer(F.col(vec_col)).alias("s"))
+        .select("vec_id", "embedding", scorer(F.col("embedding")).alias("s"))
         .select(
-            id_col,
-            vec_col,
+            "vec_id",
+            "embedding",
             _rounded_argmax_cid(cent_rows).alias("cid"),
         )
     )
@@ -1324,13 +1268,13 @@ def semantic_dedup_decisions(
     cap = head_cap
 
     def _pair_scores(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        ids = pdf[id_col].to_numpy()
+        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+        ids = pdf["vec_id"].to_numpy()
         cid = int(pdf["cid"].iloc[0])
         n = len(pdf)
         out_id, out_nbr, out_score = [ids], [np.full(n, -1)], [np.full(n, np.nan)]
         if n > 1:
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             # norms with the fold's left-to-right order
             sq = V[:, 0] * V[:, 0]
             for i in range(1, dim):
@@ -1358,7 +1302,7 @@ def semantic_dedup_decisions(
                 out_score.append(S[r_idx, c_idx])
         return pd.DataFrame(
             {
-                id_col: np.concatenate(out_id),
+                "vec_id": np.concatenate(out_id),
                 "cid": cid,
                 "nbr": np.concatenate(out_nbr),
                 "score": np.concatenate(out_score),
@@ -1367,25 +1311,20 @@ def semantic_dedup_decisions(
 
     cand = a.groupBy("cid").applyInPandas(
         _pair_scores,
-        schema=f"{id_col} long, cid long, nbr long, score double",
+        schema="vec_id long, cid long, nbr long, score double",
     )
     # The sentinel row (nbr = -1, score = null) per vector carries the
     # decision base; the EXACT rounded-threshold filter and the
     # min/count aggregation stay in the plan.
     passes = (F.col("nbr") >= 0) & (F.round(F.col("score"), 6) >= threshold)
-    return cand.groupBy(id_col, "cid").agg(
+    return cand.groupBy("vec_id", "cid").agg(
         F.min(F.when(passes, F.col("nbr"))).alias("dup_of"),
         F.sum(F.when(passes, 1).otherwise(0)).cast("bigint").alias("n_dups"),
     )
 
 
 def pq_encode(
-    embeddings: DataFrame,
-    n_codes: int = 4,
-    n_subspaces: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    micro: int = 1_000_000,
+    embeddings: DataFrame, n_codes: int = 4, n_subspaces: int = 4
 ) -> DataFrame:
     """Product-quantization encoder: split each vector into
     ``n_subspaces`` contiguous subvectors and store, per subspace, the
@@ -1413,7 +1352,7 @@ def pq_encode(
     shuffled rows are a few longs each; the vector payload itself
     never shuffles.
     """
-    best = pq_codes(embeddings, n_codes, n_subspaces, id_col, vec_col, micro)
+    best = pq_codes(embeddings, n_codes, n_subspaces)
     # codes as a '-'-joined string: the oracle comparison canonicalizes
     # scalar columns only (array cells defeat order-insensitive row
     # sorting on both the driver and the local gate).
@@ -1429,7 +1368,7 @@ def pq_encode(
             ).alias("codes"),
             F.sum("dist").alias("total_qerr"),
         )
-        .select(F.col("vid").alias(id_col), "codes", "total_qerr")
+        .select(F.col("vid").alias("vec_id"), "codes", "total_qerr")
     )
 
 def _pq_explode(
@@ -1438,7 +1377,6 @@ def _pq_explode(
     sub_dim: int,
     id_col: str,
     vec_col: str,
-    micro: int,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Vector → (id, subspace, offset, micro-unit component) quads.
@@ -1455,24 +1393,19 @@ def _pq_explode(
         *carry,
         F.expr(f"_i div {sub_dim}").alias("s"),
         (F.col("_i") % sub_dim).alias("o"),
-        F.round(F.col("_x").cast("double") * micro).cast("bigint").alias("m"),
+        F.round(F.col("_x").cast("double") * MICRO).cast("bigint").alias("m"),
     )
 
 
 def pq_subspace_codebook(
-    embeddings: DataFrame,
-    n_codes: int,
-    sub_dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    micro: int = 1_000_000,
+    embeddings: DataFrame, n_codes: int, sub_dim: int
 ) -> DataFrame:
     """(code, s, o, cm) micro-unit codebook: the first ``n_codes``
     vectors' subvectors, built by the same in-plan transform as the
     data side so quantization is identical."""
     return _pq_explode(
-        embeddings.filter(F.col(id_col) < n_codes),
-        "code", sub_dim, id_col, vec_col, micro,
+        embeddings.filter(F.col("vec_id") < n_codes),
+        "code", sub_dim, "vec_id", "embedding",
     ).select("code", "s", "o", F.col("m").alias("cm"))
 
 
@@ -1482,12 +1415,9 @@ def pq_codes(
     n_subspaces: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    micro: int = 1_000_000,
     dim: int | None = None,
     codebook_src: DataFrame | None = None,
     carry: tuple[str, ...] = (),
-    cb_id_col: str | None = None,
-    cb_vec_col: str | None = None,
 ) -> DataFrame:
     """PQ code assignment: (vid, s, code, dist) — per vector and
     subspace, the nearest codebook entry by exact integer squared-L2.
@@ -1504,12 +1434,10 @@ def pq_codes(
         dim = _probe_dim(embeddings, vec_col) or 1
     sub_dim = dim // n_subspaces
     ex = _pq_explode(
-        spread(embeddings), "vid", sub_dim, id_col, vec_col, micro,
-        carry=carry,
+        spread(embeddings), "vid", sub_dim, id_col, vec_col, carry=carry
     )
     cb = pq_subspace_codebook(
-        codebook_src if codebook_src is not None else embeddings,
-        n_codes, sub_dim, cb_id_col or id_col, cb_vec_col or vec_col, micro,
+        codebook_src if codebook_src is not None else embeddings, n_codes, sub_dim
     )
     d = F.col("m") - F.col("cm")
     dists = (
@@ -1536,9 +1464,6 @@ def ivf_pq_topk(
     nprobe: int = 2,
     n_codes: int = 4,
     n_subspaces: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    micro: int = 1_000_000,
 ) -> DataFrame:
     """IVF-PQ approximate top-k — the full two-level ANN serving
     stack: an IVF coarse quantizer prunes the corpus to ``nprobe``
@@ -1567,7 +1492,7 @@ def ivf_pq_topk(
     dim = len(query_vec)
     sub_dim = dim // n_subspaces
     cent_rows, probes, scorer = _coarse_probe(
-        embeddings, query_vec, n_centroids, nprobe, id_col, vec_col
+        embeddings, query_vec, n_centroids, nprobe
     )
     # ONE full pass: assign the coarse cid, keep only probed-list rows
     # (broadcast semi-join), and CARRY the vector + cid into the PQ
@@ -1581,19 +1506,19 @@ def ivf_pq_topk(
     # 1-2 input splits.
     probed = (
         spread(embeddings)
-        .select(id_col, vec_col, scorer(F.col(vec_col)).alias("s"))
+        .select("vec_id", "embedding", scorer(F.col("embedding")).alias("s"))
         .select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("_pv"),
+            F.col("vec_id").alias("vid"),
+            F.col("embedding").alias("_pv"),
             _rounded_argmax_cid(cent_rows).alias("cid"),
         )
         .join(F.broadcast(probes), F.col("cid") == F.col("pcid"), "left_semi")
     )
     # ADC lookup table: query subvector vs every codebook entry.
-    cb = pq_subspace_codebook(embeddings, n_codes, sub_dim, id_col, vec_col, micro)
+    cb = pq_subspace_codebook(embeddings, n_codes, sub_dim)
     qx = _pq_explode(
-        embeddings.filter(F.col(id_col) == query_id),
-        "qid", sub_dim, id_col, vec_col, micro,
+        embeddings.filter(F.col("vec_id") == query_id),
+        "qid", sub_dim, "vec_id", "embedding",
     )
     dq = F.col("m") - F.col("cm")
     adc_table = (
@@ -1604,20 +1529,19 @@ def ivf_pq_topk(
     # Encode ONLY the probed subset (against the full table's
     # codebook — the probed lists may not contain the seed rows).
     codes = pq_codes(
-        probed, n_codes, n_subspaces, "vid", "_pv", micro,
+        probed, n_codes, n_subspaces, "vid", "_pv",
         dim=dim, codebook_src=embeddings, carry=("cid",),
-        cb_id_col=id_col, cb_vec_col=vec_col,
     )
     return (
         codes.join(F.broadcast(adc_table), ["s", "code"])
         .groupBy("vid", "cid")
         .agg(F.sum("qdist").alias("adc_dist"))
         .select(
-            F.col("vid").alias(id_col),
+            F.col("vid").alias("vec_id"),
             F.col("cid").cast("bigint").alias("cid"),
             "adc_dist",
         )
-        .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
+        .orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -1628,8 +1552,6 @@ def ivf_knn_join(
     k: int = 5,
     n_centroids: int | None = None,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     corpus_count: int | None = None,
 ) -> DataFrame:
     """IVF-accelerated kNN join: ``knn_join``'s output contract served
@@ -1699,10 +1621,10 @@ def ivf_knn_join(
     # pair was the py4j bottleneck the strong-scaling rehearsal caught
     # (4 s at x10 data); the union collect carries each vector ONCE.
     qdf = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    cents = corpus.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")
+    cents = corpus.filter(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
     )
     # Both sides cast to array<double> so the union types align for
     # arbitrary inputs (float32 widens exactly; the driver-side
@@ -1756,9 +1678,9 @@ def ivf_knn_join(
     cent_rows = [SimpleNamespace(cid=c) for c in cids]
     scorer = _numpy_ivf_scorer(cvecs, cnorms)
     scored0 = spread(corpus).select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        scorer(F.col(vec_col)).alias("s"),
+        F.col("vec_id").alias("c_id"),
+        F.col("embedding").alias("c_vec"),
+        scorer(F.col("embedding")).alias("s"),
     )
     assigned = scored0.select(
         "c_id",
@@ -1856,8 +1778,6 @@ def ivf_index_build(
     corpus: DataFrame,
     n_centroids: int | None = None,
     path: str | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> str:
     """Ingest-time half of the IVF kNN join: assign every corpus
     vector to its nearest coarse centroid and persist the corpus as
@@ -1892,8 +1812,8 @@ def ivf_index_build(
         raise ValueError("ivf_index_build requires an output path")
     if n_centroids is None:
         n_centroids = adaptive_n_centroids(corpus.count())
-    cents = corpus.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")
+    cents = corpus.filter(F.col("vec_id") < n_centroids).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
     )
     cent_rows_raw = cents.collect()
     if not cent_rows_raw:
@@ -1916,9 +1836,9 @@ def ivf_index_build(
     cent_rows = [SimpleNamespace(cid=c) for c in cids]
     scorer = _numpy_ivf_scorer(cvecs, cnorms)
     scored0 = spread(corpus).select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        scorer(F.col(vec_col)).alias("s"),
+        F.col("vec_id").alias("c_id"),
+        F.col("embedding").alias("c_vec"),
+        scorer(F.col("embedding")).alias("s"),
     )
     assigned = scored0.select(
         "c_id",
@@ -1951,8 +1871,6 @@ def ivf_knn_join_prebuilt(
     queries: DataFrame,
     k: int = 5,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Query-serving half of the IVF kNN join over a prebuilt
     ``ivf_index_build`` index: rank each query's probe lists against
@@ -1992,7 +1910,7 @@ def ivf_knn_join_prebuilt(
         for c, vec in zip(book["cids"], book["cvecs"])
     ]
     qdf = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
     q_rows = qdf.collect()
     if not q_rows:

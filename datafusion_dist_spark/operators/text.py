@@ -29,7 +29,7 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 STOPWORDS = LANG_PROFILES["en"]
 
 
-def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Token counting: whitespace tokens + alnum-run tokens + chars.
 
     Token arrays are materialized once per row first: higher-order
@@ -38,9 +38,9 @@ def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     output expressions would re-tokenize per expression."""
     t = spread(docs).select(
         "doc_id",
-        F.length(text_col).cast("bigint").alias("n_chars"),
-        F.split(F.col(text_col), r"\s+").alias("_ws"),
-        tokens(F.col(text_col)).alias("_toks"),
+        F.length("text").cast("bigint").alias("n_chars"),
+        F.split(F.col("text"), r"\s+").alias("_ws"),
+        tokens(F.col("text")).alias("_toks"),
     )
     return t.select(
         "doc_id",
@@ -51,9 +51,7 @@ def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(
-    docs: DataFrame, text_col: str = "text", keep_cols: tuple = ()
-) -> DataFrame:
+def quality_score(docs: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """Heuristic quality scoring: length / stopword ratio / repetition.
 
     score ∈ [0,1]; deterministic arithmetic (rounded to 6dp) so the
@@ -65,7 +63,7 @@ def quality_score(
     whole corpus for what is a per-row expression (VERDICT r2 #3).
     """
     t = spread(docs).select(
-        "doc_id", *keep_cols, tokens(F.col(text_col)).alias("_toks")
+        "doc_id", *keep_cols, tokens(F.col("text")).alias("_toks")
     )
     toks = F.col("_toks")
     n_tok = F.size(toks)
@@ -87,11 +85,11 @@ def quality_score(
     )
 
 
-def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Deterministic lexicon-profile language ID (argmax of overlap
     counts, first-profile-wins tie-break in fixed key order)."""
     t = spread(docs).select(
-        "doc_id", tokens(F.col(text_col)).alias("_toks")
+        "doc_id", tokens(F.col("text")).alias("_toks")
     )
     toks = F.col("_toks")
     scores = {
@@ -108,9 +106,7 @@ def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return t.select(*sel)
 
 
-def winnow_fingerprints(
-    docs: DataFrame, text_col: str = "text", k: int = 3, window: int = 4
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 3, window: int = 4) -> DataFrame:
     """Document fingerprinting by winnowing (Schleimer et al., SIGMOD'03):
     rolling k-gram hashes, keep the min hash of every ``window``
     consecutive k-grams, output the distinct fingerprint set per doc.
@@ -128,7 +124,7 @@ def winnow_fingerprints(
     Tail windows (fewer than ``window`` grams remaining) shrink like a
     ROWS frame does, preserving the original output exactly.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     t = (
         spread(docs)
         .select("doc_id", toks.alias("toks"))
@@ -166,14 +162,13 @@ PII_PATTERNS: tuple[tuple[str, str], ...] = (
 
 def redact(
     docs: DataFrame,
-    text_col: str = "text",
     entities: tuple[str, ...] = (),
     patterns: tuple[tuple[str, str], ...] = PII_PATTERNS,
 ) -> DataFrame:
     """Scrub sensitive content: PII regexes plus optional literal
     entity masking (case-insensitive whole words → ``<ENT>``). One
     projection, no shuffle — the shape of a 100 TB scrubbing pass."""
-    col = F.col(text_col)
+    col = F.col("text")
     for pat, repl in patterns:
         col = F.regexp_replace(col, pat, repl)
     for ent in entities:
@@ -189,13 +184,12 @@ def redact(
             rf"(?i)(?<![a-zA-Z0-9_])\Q{ent}\E(?![a-zA-Z0-9_])",
             "<ENT>",
         )
-    return docs.withColumn(f"{text_col}_redacted", col)
+    return docs.withColumn("text_redacted", col)
 
 
 def decontaminate_overlap(
     corpus: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
     k: int = 3,
     min_shared: int = 5,
 ) -> DataFrame:
@@ -209,9 +203,9 @@ def decontaminate_overlap(
     """
     from datafusion_dist_spark.operators.dedup import doc_shingles
 
-    corp = doc_shingles(corpus, text_col, k)
+    corp = doc_shingles(corpus, k)
     bench = doc_shingles(
-        benchmark, text_col, k, id_alias="bench_id", parallelize=False
+        benchmark, k, id_alias="bench_id", parallelize=False
     )
     overlap = (
         corp.join(F.broadcast(bench), "shingle")
@@ -232,7 +226,6 @@ def decontaminate_overlap(
 def decontaminate_bloom_verify(
     corpus: DataFrame,
     benchmark: DataFrame,
-    text_col: str = "text",
     k: int = 3,
     min_shared: int = 2,
     m_bits: int = 1 << 20,
@@ -276,7 +269,7 @@ def decontaminate_bloom_verify(
         ).withColumn("h2", hash_int32(F.col("shingle"), seed="bl2"))
 
     bench = with_probes(
-        doc_shingles(benchmark, text_col, k, id_alias="bench_id", parallelize=False)
+        doc_shingles(benchmark, k, id_alias="bench_id", parallelize=False)
         .select("shingle")
         .distinct()
     )
@@ -312,7 +305,7 @@ def decontaminate_bloom_verify(
             hit &= (word >> (idx & np.uint64(63))) & np.uint64(1) != 0
         return pd.Series(hit)
 
-    corp = with_probes(doc_shingles(corpus, text_col, k))
+    corp = with_probes(doc_shingles(corpus, k))
     survivors = corp.filter(might_contain(F.col("h1"), F.col("h2")))
     # Exact verify: broadcast the true benchmark shingle set; FPs die.
     return (
@@ -329,7 +322,6 @@ def bm25_topk(
     k: int = 20,
     k1: float = 1.2,
     b: float = 0.75,
-    text_col: str = "text",
 ) -> DataFrame:
     """BM25 retrieval: score every document against a fixed bag of
     query terms, return the top-k.
@@ -348,7 +340,7 @@ def bm25_topk(
     """
     base = (
         spread(docs)
-        .select("doc_id", tokens(F.col(text_col)).alias("toks"))
+        .select("doc_id", tokens(F.col("text")).alias("toks"))
         .withColumn("dl", F.size("toks"))
     )
     # tf per (doc, query term): explode only matching tokens.
@@ -385,9 +377,7 @@ def bm25_topk(
     )
 
 
-def tfidf_topk(
-    docs: DataFrame, k_top: int = 3, text_col: str = "text"
-) -> DataFrame:
+def tfidf_topk(docs: DataFrame, k_top: int = 3) -> DataFrame:
     """Per-document top-k TF-IDF terms — keyword extraction for corpus
     indexing/labeling. score = tf * ln(N / df), rounded to 6dp.
 
@@ -411,7 +401,7 @@ def tfidf_topk(
     """
     tf = (
         spread(docs)
-        .select("doc_id", F.explode(tokens(F.col(text_col))).alias("term"))
+        .select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
@@ -438,7 +428,7 @@ def tfidf_topk(
     )
 
 
-def bigram_lm_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def bigram_lm_score(docs: DataFrame) -> DataFrame:
     """Self-perplexity proxy: train a character-bigram language model
     on the corpus itself, then score every document by its mean
     log-likelihood under that model — the classic model-based quality
@@ -461,7 +451,7 @@ def bigram_lm_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """
     from datafusion_dist_spark.functions.hashing import char_ngrams
 
-    grams = char_ngrams(text_col, 2)
+    grams = char_ngrams("text", 2)
     doc_bigrams = (
         spread(docs)
         .select("doc_id", F.explode(grams).alias("bg"))
@@ -494,7 +484,7 @@ def bigram_lm_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return scored.select("doc_id", "n_bigrams", "avg_logprob")
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition filters: duplicate-token ratio and the
     fraction of all bigrams taken by the single most frequent bigram.
 
@@ -505,7 +495,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     by doc_id throughout (no global shuffle of token text).
     """
     base = spread(docs).select(
-        "doc_id", tokens(F.col(text_col)).alias("toks")
+        "doc_id", tokens(F.col("text")).alias("toks")
     ).select(
         "doc_id",
         F.size("toks").alias("n_tok"),
@@ -557,7 +547,6 @@ def pack_sequences(
     docs: DataFrame,
     budget_tokens: int = 512,
     n_shards: int = 16,
-    text_col: str = "text",
 ) -> DataFrame:
     """Sequence packing for LLM training: assign each document to a
     fixed-token-budget pack by its starting offset in a deterministic
@@ -570,7 +559,7 @@ def pack_sequences(
     global ordering required. The assignment is a pure function of
     (doc_id, token counts), so reruns and engines agree bit-for-bit.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     t = spread(docs).select(
         "doc_id",
         "source",
@@ -593,7 +582,6 @@ def pack_sequences(
 
 def chunk_documents(
     docs: DataFrame,
-    text_col: str = "text",
     size: int = 64,
     stride: int = 48,
 ) -> DataFrame:
@@ -607,7 +595,7 @@ def chunk_documents(
     of document skew (a 1 GB document becomes many rows, not one hot
     task, because explode splits within the scan partition's stream).
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     t = (
         spread(docs)
         .select("doc_id", toks.alias("toks"))
@@ -638,9 +626,7 @@ def chunk_documents(
     )
 
 
-def word_blocks(
-    docs: DataFrame, text_col: str = "text", block_words: int = 20
-) -> DataFrame:
+def word_blocks(docs: DataFrame, block_words: int = 20) -> DataFrame:
     """Split each document into consecutive ``block_words``-token
     blocks: (doc_id, block_idx, block).
 
@@ -651,7 +637,7 @@ def word_blocks(
     unit. Pure generate/explode inside the scan partition — no shuffle,
     and a giant document becomes many rows instead of one hot task.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     t = (
         spread(docs)
         .select("doc_id", toks.alias("_toks"))
@@ -673,9 +659,7 @@ def word_blocks(
     )
 
 
-def block_dedup(
-    docs: DataFrame, text_col: str = "text", block_words: int = 20
-) -> DataFrame:
+def block_dedup(docs: DataFrame, block_words: int = 20) -> DataFrame:
     """Sub-document exact dedup (RefinedWeb-style line dedup over
     token blocks): every block that repeats anywhere in the corpus is
     kept only at its first occurrence (min (doc_id, block_idx)); each
@@ -690,7 +674,7 @@ def block_dedup(
     on skew (a viral boilerplate block lands in ONE digest partition
     but its postings are bounded by corpus size, not squared).
     """
-    blocks = word_blocks(docs, text_col, block_words).withColumn(
+    blocks = word_blocks(docs, block_words).withColumn(
         "_digest", F.md5(F.col("block"))
     )
     w = Window.partitionBy("_digest").orderBy("doc_id", "block_idx")
@@ -720,7 +704,6 @@ def block_dedup(
 
 def boilerplate_score(
     docs: DataFrame,
-    text_col: str = "text",
     df_frac: float = 0.25,
     flag_frac: float = 0.5,
 ) -> DataFrame:
@@ -741,7 +724,7 @@ def boilerplate_score(
         spread(docs)
         .select(
             "doc_id",
-            F.explode(shingle_array(tokens(F.col(text_col)), 3)).alias("shingle"),
+            F.explode(shingle_array(tokens(F.col("text")), 3)).alias("shingle"),
         )
         .distinct()
     )
@@ -771,7 +754,6 @@ def boilerplate_score(
 def source_overlap_matrix(
     docs: DataFrame,
     group_col: str = "source",
-    text_col: str = "text",
     k: int = 3,
 ) -> DataFrame:
     """Dataset-level contamination matrix: for EVERY pair of groups
@@ -808,7 +790,7 @@ def source_overlap_matrix(
     from datafusion_dist_spark.functions.hashing import shingle_array
 
     t = spread(docs).select(
-        F.col(group_col).alias("g"), tokens(F.col(text_col)).alias("_toks")
+        F.col(group_col).alias("g"), tokens(F.col("text")).alias("_toks")
     )
     # A doc with < k tokens has an empty shingle array and would vanish
     # under a plain explode — silently dropping any group made up

@@ -121,9 +121,3 @@ def executed_scan_facts(df: DataFrame, descend_cached: bool = True) -> dict:
 
     walk(df._jdf.queryExecution().executedPlan())  # type: ignore[attr-defined]
     return counts
-
-
-def assert_pushed_filter(df: DataFrame, fragment: str) -> None:
-    facts = plan_facts(df)
-    joined = "; ".join(facts["pushed_filters"])
-    assert fragment in joined, f"filter '{fragment}' not pushed; got: {joined}"

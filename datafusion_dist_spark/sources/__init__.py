@@ -2,72 +2,10 @@
 
 Reference surface: in-memory MemTables + one virtual system table, with
 results streamed to the client as Arrow (SURVEY §2.C scans/sinks —
-there are *no* file sinks in the reference). Spark gives every real
-connector for free; this module pins the engine's entry points and
-stubs what the container lacks behind import-tries.
+there are *no* file sinks in the reference). Spark's own readers and
+writers (``spark.read.*``, ``df.write.*``, ``spark.createDataFrame``)
+cover files and in-memory tables and are called directly. What Spark
+lacks lives here: the Python DataSource API sources in ``python_ds.py``
+(synthetic generator, Flight consumer, Arrow IPC directory) and the
+index JSON sidecars in ``sidecar.py``.
 """
-
-from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar scan with predicate pushdown + column pruning — the
-    default source (replaces the reference's MemTable fixtures)."""
-    return spark.read.parquet(path)
-
-
-def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -> DataFrame:
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)  # never inferSchema in production
-    return reader.csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — same pushdown/pruning contract as parquet."""
-    return spark.read.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).orc(path)
-
-
-def read_text(spark: SparkSession, path: str) -> DataFrame:
-    """Line-oriented text source (one `value` column) — raw-corpus
-    ingestion before any parsing."""
-    return spark.read.text(path)
-
-
-def mem_table(spark: SparkSession, rows, schema, num_partitions: int | None = None) -> DataFrame:
-    """In-memory table — the analog of the reference's partitioned
-    MemTable fixtures (integration-tests/src/data.rs:36-92)."""
-    df = spark.createDataFrame(rows, schema)
-    if num_partitions is not None:
-        df = df.repartition(num_partitions)
-    return df
-
-
-def read_jdbc(spark: SparkSession, url: str, dbtable: str, **options) -> DataFrame:
-    """JDBC source. No JDBC drivers ship in this container — the call
-    constructs the reader (plumbing is real); executing it without a
-    driver jar raises from Spark."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", dbtable)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by=None) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

@@ -7,16 +7,18 @@ The reference implements custom DataFusion ``TableProvider``s: the
 DataSource API — schema + partition planning + per-partition readers,
 exactly the DataSource V2 contract, registered per-session.
 
-Two sources:
+Sources:
 
-- ``ddspark_jobs`` — the job-registry virtual table. The registry
-  snapshot is passed as a JSON option at read time (the driver-side
-  registry is not addressable from executors — same reason the
-  reference pins memory-table stages to the submitting node,
-  ``dist/src/scheduler.rs:146-175``).
 - ``ddspark_synth`` — deterministic synthetic-corpus generator with
   N independent partitions (seeded per partition). The 100 TB story:
   data generation parallelizes like a scan, no files involved.
+- ``ddspark_flight`` — scan a remote ddspark Flight server.
+- ``ddspark_arrow_dir`` — Arrow IPC directory sink, batch and stream
+  source.
+
+The ``running_jobs`` table is not a data source here:
+``DistEngine.running_jobs_df`` builds it on the driver, where the job
+registry lives.
 """
 
 from __future__ import annotations
@@ -33,53 +35,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-JOBS_SCHEMA = "job_id string, created_at_us long, job_meta string, stages string"
 SYNTH_SCHEMA = "doc_id long, part_id int, text string, quality double"
-
-
-class JobsDataSource(DataSource):
-    """``running_jobs`` as a first-class data source."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "ddspark_jobs"
-
-    def schema(self) -> str:
-        return JOBS_SCHEMA
-
-    def reader(self, schema) -> "JobsReader":
-        return JobsReader(self.options.get("snapshot", "[]"))
-
-
-class JobsReader(DataSourceReader):
-    def __init__(self, snapshot_json: str) -> None:
-        self._rows = json.loads(snapshot_json)
-
-    def read(self, partition):
-        for r in self._rows:
-            yield (
-                r["job_id"],
-                int(r["created_at_us"]),
-                r.get("job_meta", "{}"),
-                r.get("stages", "[]"),
-            )
-
-
-def jobs_snapshot_json(entries) -> str:
-    """Serialize JobRegistry entries for the ``snapshot`` read option."""
-    return json.dumps(
-        [
-            {
-                "job_id": e.job_id,
-                "created_at_us": int(e.created_at * 1_000_000),
-                "job_meta": json.dumps(e.meta, sort_keys=True),
-                "stages": json.dumps(
-                    {"status": e.status, "error": e.error}, sort_keys=True
-                ),
-            }
-            for e in entries
-        ]
-    )
 
 
 _WORDS = (
@@ -241,7 +197,6 @@ class FlightReader(DataSourceReader):
 
 def register_sources(spark) -> None:
     """Register the sources on the session (idempotent)."""
-    spark.dataSource.register(JobsDataSource)
     spark.dataSource.register(SynthDataSource)
     spark.dataSource.register(ArrowDirDataSource)
     try:

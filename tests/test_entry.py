@@ -10,13 +10,11 @@ import pytest
 import __spark_entry__ as entrymod
 
 _ROOT = pathlib.Path(__file__).resolve().parent.parent
-# Every root harness module; tools_driver_sim runs its sweep on import
-# by design and is the one exception.
+# Every root harness module.
 _HARNESSES = sorted(
     p.stem
     for pattern in ("bench*.py", "tools_*.py")
     for p in _ROOT.glob(pattern)
-    if p.stem != "tools_driver_sim"
 )
 
 

@@ -12,20 +12,14 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_dist_spark.sources import mem_table
-
 
 @pytest.fixture(scope="module")
 def fixtures(spark):
-    simple = mem_table(
-        spark,
-        [("Alice", 25), ("Bob", 30)],
-        "name string, age int",
-        num_partitions=2,
-    )
+    simple = spark.createDataFrame(
+        [("Alice", 25), ("Bob", 30)], "name string, age int"
+    ).repartition(2)
     simple.createOrReplaceTempView("simple")
-    file_grid = mem_table(
-        spark,
+    file_grid = spark.createDataFrame(
         [
             (1, "older", 100),
             (1, "latest", 200),
@@ -35,8 +29,7 @@ def fixtures(spark):
             (3, "older3", 40),
         ],
         "id int, file_name string, view_updated long",
-        num_partitions=2,
-    )
+    ).repartition(2)
     file_grid.createOrReplaceTempView("file_grid")
     return spark
 

@@ -319,6 +319,7 @@ def test_stream_output_metrics_recorded(engine):
     df = engine.running_jobs_df(include_finished=True)
     row = next(r for r in df.collect() if r.job_id == handle.job_id)
     assert '"output_rows": 5' in row.stages
+    assert '"status": "completed"' in row.stages
 
 
 def test_submit_df_dataframe_entry(engine):

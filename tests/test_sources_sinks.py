@@ -15,14 +15,13 @@ from pyspark.sql import functions as F
 
 from datafusion_dist_spark.catalog import load_table
 from datafusion_dist_spark.plans import formatted_plan, plan_facts
-from datafusion_dist_spark.sources import read_csv, read_json, write_parquet
 from tests.conftest import SF_DIR
 
 
 def test_parquet_roundtrip(spark, tmp_path):
     out = str(tmp_path / "nation_out")
     n = load_table(spark, SF_DIR, "nation")
-    write_parquet(n, out)
+    n.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, n.collect()))
 
@@ -32,7 +31,7 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     o = load_table(spark, SF_DIR, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    write_parquet(o, out, partition_by=["o_orderstatus"])
+    o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     back = spark.read.parquet(out).filter(F.col("o_orderstatus") == "F")
     plan = formatted_plan(back)
     # Partition pruning: the filter is resolved against directory
@@ -83,8 +82,8 @@ def test_csv_json_sources_roundtrip(spark, tmp_path):
     csv_path, json_path = str(tmp_path / "n_csv"), str(tmp_path / "n_json")
     n.write.option("header", "true").csv(csv_path)
     n.write.json(json_path)
-    csv_back = read_csv(spark, csv_path, schema=n.schema)
-    json_back = read_json(spark, json_path, schema=n.schema)
+    csv_back = spark.read.option("header", "true").schema(n.schema).csv(csv_path)
+    json_back = spark.read.schema(n.schema).json(json_path)
     expect = sorted(map(tuple, n.collect()))
     assert sorted(map(tuple, csv_back.collect())) == expect
     assert sorted(map(tuple, json_back.collect())) == expect
@@ -128,36 +127,11 @@ def test_python_datasource_synth_partitioned(spark):
     assert df.filter(F.col("part_id") == 3).count() == 50
 
 
-def test_python_datasource_jobs_snapshot(spark):
-    from datafusion_dist_spark.engine import JobRegistry
-    from datafusion_dist_spark.sources.python_ds import (
-        jobs_snapshot_json,
-        register_sources,
-    )
-
-    register_sources(spark)
-    reg = JobRegistry()
-    e1 = reg.create({"query": "SELECT 1"})
-    e2 = reg.create({"query": "SELECT 2"})
-    reg.finish(e2.job_id)
-    df = (
-        spark.read.format("ddspark_jobs")
-        .option("snapshot", jobs_snapshot_json(reg.all()))
-        .load()
-    )
-    rows = {r.job_id: r for r in df.collect()}
-    assert set(rows) == {e1.job_id, e2.job_id}
-    assert '"query": "SELECT 1"' in rows[e1.job_id].job_meta
-    assert '"status": "completed"' in rows[e2.job_id].stages
-
-
 def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    from datafusion_dist_spark.sources import read_orc, write_orc
-
     n = load_table(spark, SF_DIR, "nation")
     out = str(tmp_path / "nation_orc")
-    write_orc(n, out)
-    back = read_orc(spark, out).filter(F.col("n_regionkey") == 1)
+    n.write.mode("overwrite").orc(out)
+    back = spark.read.orc(out).filter(F.col("n_regionkey") == 1)
     expect = sorted(
         map(tuple, n.filter(F.col("n_regionkey") == 1).collect())
     )
@@ -168,11 +142,9 @@ def test_orc_roundtrip_with_pushdown(spark, tmp_path):
 
 
 def test_text_source_reads_lines(spark, tmp_path):
-    from datafusion_dist_spark.sources import read_text
-
     p = tmp_path / "lines.txt"
     p.write_text("alpha\nbeta\ngamma\n")
-    rows = read_text(spark, str(p)).collect()
+    rows = spark.read.text(str(p)).collect()
     assert sorted(r.value for r in rows) == ["alpha", "beta", "gamma"]
 
 
