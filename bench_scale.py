@@ -321,26 +321,30 @@ def measure_ivf_prebuilt(
     from datafusion_dist_spark.operators import similarity
 
     phases: dict[str, tuple[float, float]] = {}
-    # The "warm" pass over the base corpus is discarded: it pays the
-    # first-use costs (Python workers, codegen of these plans) that
-    # would otherwise land in base_sec and bias both ratios low.
-    for tag, d, reps in (
-        ("warm", base_dir, 1), ("base", base_dir, runs), ("scaled", scale_dir, runs)
-    ):
+    # Untimed first pass over the base corpus: the first-use cost (Python
+    # workers, codegen of these plans) would otherwise land in base_sec.
+    emb = load_table(spark, base_dir, "embeddings")
+    path = os.path.join(
+        os.path.dirname(scale_dir) or "/tmp/ddspark-scale", "ivf-index-base"
+    )
+    similarity.ivf_index_build(emb, n_centroids=max(8, emb.count() // 250), path=path)
+    qs = emb.filter(F.col("vec_id") % 40 == 0)
+    bench.run_query(similarity.ivf_knn_join_prebuilt(spark, path, qs, k=5, nprobe=2))
+    for tag, d in (("base", base_dir), ("scaled", scale_dir)):
         emb = load_table(spark, d, "embeddings")
         n = emb.count()
         k_centroids = max(8, n // 250)  # the adaptive-K discipline
         path = os.path.join(
             os.path.dirname(scale_dir) or "/tmp/ddspark-scale",
-            f"ivf-index-{'scaled' if tag == 'scaled' else 'base'}",
+            f"ivf-index-{tag}",
         )
         tb = tq = float("inf")
-        for _ in range(reps):
+        for _ in range(runs):
             t0 = time.perf_counter()
             similarity.ivf_index_build(emb, n_centroids=k_centroids, path=path)
             tb = min(tb, time.perf_counter() - t0)
         qs = emb.filter(F.col("vec_id") % 40 == 0)
-        for _ in range(reps):
+        for _ in range(runs):
             t0 = time.perf_counter()
             bench.run_query(
                 similarity.ivf_knn_join_prebuilt(spark, path, qs, k=5, nprobe=2)

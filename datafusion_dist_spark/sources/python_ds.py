@@ -24,7 +24,6 @@ registry lives.
 from __future__ import annotations
 
 import hashlib
-import json
 
 from pyspark.sql.datasource import (
     DataSource,

@@ -15,14 +15,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 import duckdb
 from pyspark.sql import SparkSession
 
-# 2. queries vs oracles at sf0.01 (--sf-dir overrides: the r5 protocol
-# runs the FULL sweep at sf0.1 too — scale-dependent constants (caps,
-# bucket ladders) are the recurring bug class and only a second SF
-# catches a silently no-oping one).
-sf_dir = "/root/testdata/sf0.01"
 
-
-def main(sf_dir: str = sf_dir) -> int:
+def main() -> int:
     # Vanilla session the way a driver might build it — NOT build_session.
     spark = (SparkSession.builder.master("local[8]")
              .appName("driver-sim")
@@ -38,7 +32,11 @@ def main(sf_dir: str = sf_dir) -> int:
     rows = df.collect()
     print(f"entry(): {len(rows)} rows, schema={[f.name for f in df.schema.fields]}")
 
-    # 2. queries vs oracles
+    # 2. queries vs oracles at sf0.01. --sf-dir reruns the full sweep at
+    # another scale: scale-dependent constants (caps, bucket ladders) are
+    # the recurring bug class, and only a second SF catches one that
+    # silently does nothing.
+    sf_dir = "/root/testdata/sf0.01"
     if "--sf-dir" in sys.argv:
         sf_dir = sys.argv[sys.argv.index("--sf-dir") + 1]
     con = duckdb.connect()
