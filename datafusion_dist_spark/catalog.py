@@ -46,7 +46,7 @@ def pin_session_confs(spark: SparkSession) -> None:
     appended to excludedRules) — in a shared session that changes
     timestamp semantics for the host's own queries too. It is the
     deliberate contract of every public entry point below
-    (``load_table`` / ``load_tables`` / ``register_views``): the
+    (``load_table`` / ``register_views``): the
     engine's oracle parity hard-requires these settings, and a
     save/restore scope would silently un-pin them for the lazily
     evaluated DataFrames we return (confs are read at execution, not
@@ -133,20 +133,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register each table as a temp view so ``spark.sql`` can see it.
 
     Idempotent; re-registering with the same sf_dir is a no-op in
     effect. Mirrors the reference's ``ctx.register_table`` calls.
     Side effect: pins session confs (see ``pin_session_confs``).
     """
-    for n in names:
+    for n in TESTDATA_TABLES:
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -20,13 +20,14 @@ import threading
 import time
 import uuid
 from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.serializers import NoOpSerializer
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 from pyspark.traceback_utils import SCCallSiteSync
-from pyspark.util import _load_from_socket, _local_iterator_from_socket
+from pyspark.util import _load_from_socket
 
 from datafusion_dist_spark import catalog
 from datafusion_dist_spark.session import build_session
@@ -75,7 +76,7 @@ class JobEntry:
     started_at: float | None = None  # first client pull; None = unpolled
     last_pull_at: float | None = None  # last batch yielded to a client
     finished_at: float | None = None
-    pulls_in_flight: int = 0  # active stream_arrow/stream_partition pulls
+    pulls_in_flight: int = 0  # active stream_arrow/stream_partition/collect pulls
     extra: dict = field(default_factory=dict)
 
     def last_activity(self) -> float:
@@ -160,16 +161,14 @@ class JobRegistry:
             entry.pulls_in_flight = max(0, entry.pulls_in_flight - 1)
             entry.last_pull_at = time.time()
 
-    def record_output(self, entry: JobEntry, rows: int, nbytes: int) -> None:
-        """Per-stream output accounting — the reference's TaskStream
-        records output_rows/output_bytes as batches flow through it
-        (``dist/src/runtime.rs:598-686``); lock-guarded so concurrent
-        per-partition pulls do not lose increments."""
+    def count(self, entry: JobEntry, **deltas: int) -> None:
+        """Add ``deltas`` to the entry's counters (``chunks_fetched``,
+        ``output_rows``, ``output_bytes``) — the reference's TaskStream
+        output accounting (``dist/src/runtime.rs:598-686``); lock-guarded
+        so concurrent per-partition pulls do not lose increments."""
         with self._lock:
-            entry.extra["output_rows"] = entry.extra.get("output_rows", 0) + rows
-            entry.extra["output_bytes"] = (
-                entry.extra.get("output_bytes", 0) + nbytes
-            )
+            for key, n in deltas.items():
+                entry.extra[key] = entry.extra.get(key, 0) + n
 
     def complete_partition(self, entry: JobEntry, partition: int) -> None:
         """Record a fully-drained per-partition pull; finish the job
@@ -254,47 +253,22 @@ class JobHandle:
             self._entry.started_at = time.time()
         sc = self._engine.spark.sparkContext
         sc.setJobGroup(self._entry.spark_job_group, json.dumps(self._entry.meta))
-        sc.setLocalProperty(
-            "spark.scheduler.pool", self._entry.extra.get("pool", "default")
-        )
+        sc.setLocalProperty("spark.scheduler.pool", "default")
 
-    def stream_arrow(self, batch_rows: int = 10_000) -> Iterator:
-        """Stream the result as Arrow record batches, pulled partition
-        by partition — the analog of one FlightSQL ``do_get`` per
-        stage-0 partition (``main.rs:209-265``).
-
-        Columnar end-to-end, never re-serialized: executors encode each
-        partition as Arrow IPC record-batch messages with Spark's own
-        JVM converter (``toArrowBatchRdd``, ≤ ``spark.sql.execution.
-        arrow.maxRecordsPerBatch`` rows each); the driver serves one
-        partition at a time (``toLocalIteratorAndServe``, no prefetch)
-        and Python wraps each message as a batch, sliced zero-copy to ≤
-        ``batch_rows`` — like the reference's data plane
-        (``networks/tonic/src/server.rs:109-141``). No executor Python
-        worker; driver Python cost is O(batches), memory one partition
-        plus one batch. The trade: executor→driver bytes are
-        uncompressed Arrow (that converter ignores the arrow
-        compression codec conf); LZ4 is on the client-facing Flight
-        wire only.
-
-        A client that abandons the iterator mid-stream (GeneratorExit)
-        is recorded, not leaked as a forever-running job; a client
-        that stalls without closing is swept by the TTL GC via
-        ``last_pull_at``.
-        """
+    @contextmanager
+    def _pull(self) -> Iterator[None]:
+        """The one job lifecycle of every pull (``stream_arrow``,
+        ``stream_partition``, ``collect``): enter the job scope and
+        mark the pull in flight, so the TTL sweeper never drops a job
+        Spark is computing; record a failure with its message, or
+        ``ABANDONED`` when the client closes a stream early
+        (GeneratorExit), so no row stays ``running`` until GC. The
+        caller records completion inside the block."""
         self._enter_job_scope()
         reg = self._engine.jobs
         reg.begin_pull(self._entry)
         try:
-            sc = self._engine.spark.sparkContext
-            with SCCallSiteSync(sc):
-                sock_info = sc._jvm.PythonRDD.toLocalIteratorAndServe(
-                    self.df._jdf.toArrowBatchRdd(), False
-                )
-            yield from self._deliver(
-                _local_iterator_from_socket(sock_info, NoOpSerializer()), batch_rows
-            )
-            reg.finish(self.job_id)
+            yield
         except GeneratorExit:
             reg.finish(self.job_id, error=reg.ABANDONED)
             raise
@@ -304,11 +278,59 @@ class JobHandle:
         finally:
             reg.end_pull(self._entry)
 
+    def stream_arrow(self, batch_rows: int = 10_000) -> Iterator:
+        """Stream the whole result as Arrow record batches, one
+        final-stage partition after another in partition order — the
+        analog of draining every stage-0 partition's ``do_get``
+        (``main.rs:209-265``).
+
+        Nothing runs before the first pull: the generator builds the
+        result RDD (``toArrowBatchRdd``) then, and keeps it local, so a
+        never-pulled job executes nothing and a drained one holds no
+        RDD. Each partition is its own Spark job, started only after
+        the client has drained the previous one (see
+        :meth:`_serve_partition`). The job completes when the last
+        partition is drained; a client that abandons the iterator is
+        recorded, one that stalls without closing is swept by the TTL
+        GC via ``last_pull_at``.
+        """
+        with self._pull():
+            rdd = self.df._jdf.toArrowBatchRdd().toJavaRDD()
+            for partition in range(rdd.getNumPartitions()):
+                yield from self._serve_partition(rdd, partition, batch_rows)
+            self._engine.jobs.finish(self.job_id)
+
+    def _serve_partition(self, rdd, partition: int, batch_rows: int) -> Iterator:
+        """Compute ONE final-stage partition of the result RDD as its
+        own Spark job and deliver it — the only serving protocol.
+
+        Columnar end-to-end, never re-serialized: executors encode the
+        partition as Arrow IPC record-batch messages with Spark's own
+        JVM converter (``toArrowBatchRdd``, ≤ ``spark.sql.execution.
+        arrow.maxRecordsPerBatch`` rows each); the driver JVM collects
+        the partition and serves it over a local socket
+        (``PythonRDD.runJob``), bounded by ``spark.driver.maxResultSize``;
+        Python reads it message by message (:meth:`_deliver`), like the
+        reference's data plane (``networks/tonic/src/server.rs:109-141``).
+        No executor Python worker. The trade: executor→driver bytes are
+        uncompressed Arrow (that converter ignores the arrow compression
+        codec conf); LZ4 is on the client-facing Flight wire only."""
+        # The job group is a thread-local property: set it again so a
+        # stream resumed on another thread keeps its jobs in the group.
+        self._enter_job_scope()
+        sc = self._engine.spark.sparkContext
+        with SCCallSiteSync(sc):
+            sock_info = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), rdd, [partition])
+        yield from self._deliver(
+            _load_from_socket(sock_info, NoOpSerializer()), batch_rows
+        )
+
     def _deliver(self, messages: Iterator, batch_rows: int) -> Iterator:
         """Decode each Arrow IPC record-batch message read off the JVM
         result socket and yield it in zero-copy slices of ≤
-        ``batch_rows`` rows. Control passes to the client with the
-        in-flight flag dropped: a client that stalls at a ``yield``
+        ``batch_rows`` rows. Driver-side Python memory is ONE message,
+        never the whole partition. Control passes to the client with
+        the in-flight flag dropped: a client that stalls at a ``yield``
         ages out by TTL; one that comes back re-arms the exemption
         before Spark computes again."""
         import pyarrow as pa
@@ -319,39 +341,37 @@ class JobHandle:
             # Message-level fetch counter: lets tests (and operators)
             # observe that batches are yielded while later messages are
             # still unfetched.
-            with reg._lock:
-                self._entry.extra["chunks_fetched"] = (
-                    self._entry.extra.get("chunks_fetched", 0) + 1
-                )
+            reg.count(self._entry, chunks_fetched=1)
             batch = pa.ipc.read_record_batch(pa.py_buffer(raw), schema)
             for off in range(0, batch.num_rows, batch_rows):
                 chunk = batch.slice(off, batch_rows)
-                self._count_output(chunk)
+                reg.count(
+                    self._entry, output_rows=chunk.num_rows, output_bytes=chunk.nbytes
+                )
                 reg.end_pull(self._entry)
-                yield chunk
-                reg.begin_pull(self._entry)
+                try:
+                    yield chunk
+                finally:
+                    # Also on close: _pull's end_pull must not take the
+                    # in-flight mark of another pull of this job.
+                    reg.begin_pull(self._entry)
 
     def materialize_partitions(self, batch_rows: int = 10_000) -> int:
-        """Opt-in per-partition pull model — the reference's ticket
-        granularity (one ticket per final-stage partition,
-        ``main.rs:298-306``), with the documented trade: pinning the
-        final partition count under AQE requires materializing the
-        upstream query stages NOW (AdaptiveSparkPlan only fixes the
-        final layout after its shuffles run), so this breaks the
-        never-polled-jobs-execute-nothing guarantee for THIS job —
-        which is why it is opt-in and not the default path.
+        """Pin the final-stage partitions for per-partition pulls — the
+        reference's ticket granularity (one ticket per final-stage
+        partition, ``main.rs:298-306``). Returns their number.
 
-        After this call, :meth:`stream_partition` pulls exactly one
-        final-stage partition per call, as :meth:`stream_arrow`'s
-        JVM-native Arrow batches; upstream stages are computed once here
-        and their shuffle output is REUSED by every pull (same RDD
-        lineage), and re-pulling a partition re-executes only that
-        partition — the reference's TaskSet-reset semantics
-        (``dist/src/runtime.rs:499-525``).
-
-        Returns the number of final-stage partitions."""
+        The documented trade: under AQE the final partition layout is
+        fixed only after the upstream shuffles run, so building the
+        result RDD here runs the upstream query stages NOW, and this
+        job no longer executes nothing until pulled — which is why it
+        is opt-in and :meth:`stream_arrow` is the default. The RDD is
+        kept in the job entry: every :meth:`stream_partition` reuses
+        its upstream shuffle output, so a re-pull re-executes only
+        that partition — the reference's TaskSet-reset semantics
+        (``dist/src/runtime.rs:499-525``)."""
         self._enter_job_scope()
-        rdd = self.df._jdf.toArrowBatchRdd()
+        rdd = self.df._jdf.toArrowBatchRdd().toJavaRDD()
         self._entry.extra["partition_rdd"] = rdd
         self._entry.extra["batch_rows"] = batch_rows
         n = rdd.getNumPartitions()
@@ -360,60 +380,31 @@ class JobHandle:
 
     def stream_partition(self, partition: int) -> Iterator:
         """Pull ONE final-stage partition as Arrow batches (the
-        ``do_get`` per ticket analog, ``main.rs:209-265``). Requires
+        ``do_get`` per ticket analog, ``main.rs:209-265``); requires
         :meth:`materialize_partitions` first.
 
-        Incremental like the reference's per-ticket stream
-        (``networks/tonic/src/server.rs:109-141``): the partition's
-        JVM-encoded Arrow record-batch messages are read off the
-        result socket one at a time and each batch is yielded before
-        the next message is fetched into Python — driver-side Python
-        memory is bounded at ONE batch, never the whole partition (a
-        skewed final partition at 100× scale must not become a driver
-        OOM). The JVM still buffers the task's uncompressed Arrow
-        result, bounded by ``spark.driver.maxResultSize``; LZ4 applies
-        on the client-facing Flight wire only."""
+        Same serving path and job lifecycle as :meth:`stream_arrow`,
+        delivered incrementally: Python memory holds one Arrow message,
+        never the whole partition. A failed or abandoned pull is recorded;
+        the job completes once every partition has been drained at
+        least once — the reference's CheckJobCompleted over stage-0
+        partitions (``dist/src/event.rs:214-334``)."""
         rdd = self._entry.extra.get("partition_rdd")
         if rdd is None:
             raise RuntimeError(
                 "materialize_partitions() must run before stream_partition()"
             )
-        self._enter_job_scope()
-        reg = self._engine.jobs
-        reg.begin_pull(self._entry)
-        try:
-            sc = self._engine.spark.sparkContext
-            with SCCallSiteSync(sc):
-                sock_info = sc._jvm.PythonRDD.runJob(
-                    sc._jsc.sc(), rdd.toJavaRDD(), [int(partition)]
-                )
-            yield from self._deliver(
-                _load_from_socket(sock_info, NoOpSerializer()),
-                self._entry.extra["batch_rows"],
+        partition = int(partition)
+        with self._pull():
+            yield from self._serve_partition(
+                rdd, partition, self._entry.extra["batch_rows"]
             )
-            # Job completion = every partition drained at least once —
-            # the reference's CheckJobCompleted over stage-0 partitions
-            # (dist/src/event.rs:214-334).
-            reg.complete_partition(self._entry, int(partition))
-        finally:
-            reg.end_pull(self._entry)
-
-    def _count_output(self, batch) -> None:
-        """Surfaced in the ``running_jobs`` stages JSON; delegated to
-        the registry so the counters are lock-guarded against
-        concurrent per-partition pulls."""
-        self._engine.jobs.record_output(
-            self._entry, batch.num_rows, batch.nbytes
-        )
+            self._engine.jobs.complete_partition(self._entry, partition)
 
     def collect(self) -> list[Row]:
-        self._enter_job_scope()
-        try:
+        with self._pull():
             rows = self.df.collect()
-        except Exception as exc:  # noqa: BLE001
-            self._engine.jobs.finish(self.job_id, error=str(exc))
-            raise
-        self._engine.jobs.finish(self.job_id)
+            self._engine.jobs.finish(self.job_id)
         return rows
 
     def cancel(self) -> None:
@@ -494,28 +485,24 @@ class DistEngine:
             return self.spark.sql(query, args=args)
         return self.spark.sql(query)
 
-    def submit(
-        self,
-        query: str,
-        meta: dict | None = None,
-        pool: str = "default",
-        args: dict | list | None = None,
-    ) -> JobHandle:
-        """Plan the query and mint a job — no execution yet (lazy pull
-        model, reference ``runtime.submit`` at main.rs:288-295).
-
-        ``pool`` names a FAIR scheduler pool: the Spark analog of the
-        reference's dedicated CPU runtime (dist/src/executor.rs:55-96)
-        — CPU-heavy jobs go to a separate pool so interactive queries
-        keep getting task slots. ``args`` binds named parameters (see
-        :meth:`sql`).
-        """
+    def _mint(self, query: str, meta: dict | None) -> JobEntry:
+        """Refuse new work once terminating; else mint the registry row."""
         if self._terminating:
             raise EngineTerminatingError(
                 "engine is terminating; new submissions are refused"
             )
-        entry = self.jobs.create({"query": query, **(meta or {})})
-        entry.extra["pool"] = pool
+        return self.jobs.create({"query": query, **(meta or {})})
+
+    def submit(
+        self,
+        query: str,
+        meta: dict | None = None,
+        args: dict | list | None = None,
+    ) -> JobHandle:
+        """Plan the query and mint a job — no execution yet (lazy pull
+        model, reference ``runtime.submit`` at main.rs:288-295).
+        ``args`` binds named parameters (see :meth:`sql`)."""
+        entry = self._mint(query, meta)
         try:
             df = self.sql(query, args=args)
         except Exception as exc:  # parse/analysis error: record, don't leak
@@ -523,19 +510,12 @@ class DistEngine:
             raise
         return JobHandle(self, entry, df)
 
-    def submit_df(self, df: DataFrame, meta: dict | None = None,
-                  pool: str = "default") -> JobHandle:
+    def submit_df(self, df: DataFrame, meta: dict | None = None) -> JobHandle:
         """Mint a job for an already-built DataFrame — the
         DataFrame-API twin of :meth:`submit` (same lazy-ticket model,
         registry row, GC and streaming semantics; the reference is
         SQL-only, this engine's entry surface is SQL + DataFrame)."""
-        if self._terminating:
-            raise EngineTerminatingError(
-                "engine is terminating; new submissions are refused"
-            )
-        entry = self.jobs.create({"query": "<dataframe>", **(meta or {})})
-        entry.extra["pool"] = pool
-        return JobHandle(self, entry, df)
+        return JobHandle(self, self._mint("<dataframe>", meta), df)
 
     def execute(self, query: str) -> list[Row]:
         return self.submit(query).collect()

@@ -101,97 +101,6 @@ def _load_all() -> None:
 # growing union. Bump by 1 each round.
 ROTATION_EPOCH = 12
 
-# Ledger of entries the EXTERNAL driver oracle has hash-checked at least
-# once (union of keys across the committed CORRECTNESS_r01..r{N}.json).
-# Blind epoch rotation decayed to 14 fresh entries per round because
-# small families re-serve already-sampled members into the first-50
-# window; instead, never-externally-sampled entries are ordered FIRST
-# (family-interleaved within), sampled ones after, so each round's
-# fixed-size prefix sample is spent entirely on fresh entries until
-# external coverage is total. Release checklist: after each round, fold
-# the new CORRECTNESS_r{N}.json keys into this set.
-EXTERNALLY_SAMPLED: frozenset[str] = frozenset({
-    "agg_approx_distinct", "agg_argmax", "agg_bitmap_distinct",
-    "agg_bool_bitwise", "agg_count_distinct", "agg_count_star_empty",
-    "agg_countmin_heavy_hitters", "agg_cube", "agg_global",
-    "agg_group_by_all", "agg_groupby_empty", "agg_groupby_multi",
-    "agg_grouping_sets", "agg_having", "agg_higher_moments",
-    "agg_histogram", "agg_hll_cardinality", "agg_hll_overlap_matrix",
-    "agg_hll_registers", "agg_listagg", "agg_mode", "agg_null_semantics",
-    "agg_percentiles", "agg_regression_moments", "agg_rollup",
-    "agg_salted_twophase", "agg_stats", "ann_ivf_knn_join",
-    "ann_ivf_knn_join_adaptive", "ann_ivf_pq_topk", "ann_ivf_topk",
-    "ann_kmeans_refine", "ann_kmeans_two_rounds", "ann_knn_join",
-    "array_ops", "constant_projection", "cte_multi", "cte_recursive",
-    "decontaminate_bloom_verify", "decontaminate_ngram",
-    "dedup_embedding_cosine", "dedup_embedding_cosine_adaptive",
-    "dedup_keep_best", "dedup_ngram_jaccard_capped",
-    "dedup_paragraph_blocks", "dedup_semantic", "dedup_substring_spans",
-    "embedding_health_report", "embedding_pq_encode",
-    "embedding_quantize_int8", "entity_match_fuzzy",
-    "events_cms_watchlist", "events_funnel", "events_hopping",
-    "events_retention_cohorts", "events_rollup_reagg",
-    "events_window_quantiles", "except_all", "except_distinct",
-    "filter_basic", "filter_empty", "fn_bits", "fn_cast", "fn_collation",
-    "fn_conditional", "fn_date", "fn_date_parts", "fn_higher_order",
-    "fn_map_ops", "fn_math", "fn_misc", "fn_regexp", "fn_string",
-    "fn_string_extra", "fn_variant", "graph_pagerank",
-    "graph_triangle_count", "intersect_all", "intersect_distinct",
-    "join_asof", "join_full_outer", "join_range_banded",
-    "join_range_interval", "join_scd2_pit", "join_semi",
-    "json_extract_props", "limit_offset", "limit_subquery_agg",
-    "limit_zero", "merge_upsert", "multimodal_features",
-    "multimodal_frames", "multimodal_phash_pairs", "multimodal_resize",
-    "pipeline_chunk_documents", "pipeline_clean_corpus",
-    "pipeline_epoch_upsample", "pipeline_mix_rebalance",
-    "pipeline_pack_sequences", "pipeline_shuffle_shard", "pivot_status",
-    "projection_expr", "sample_hash_bernoulli", "sample_importance_dsir",
-    "sample_reservoir", "sample_split_train_val", "sample_stratified",
-    "scan_full", "scd2_history", "select_distinct", "select_one",
-    "sort_multi_nulls", "struct_nested", "subquery_any_all",
-    "subquery_correlated_exists", "subquery_in", "subquery_lateral",
-    "subquery_not_in_3vl", "subquery_scalar", "system_running_jobs",
-    "text_langid", "text_lm_score", "text_quality", "text_repetition",
-    "text_tfidf_topk", "text_token_stats", "text_vocab_coverage",
-    "timeseries_gapfill", "topk", "tpch_q12", "tpch_q14", "tpch_q15",
-    "tpch_q17", "tpch_q18", "tpch_q21_waiting", "tpch_q7", "tpch_q9",
-    "udf_grouped_agg", "udf_pandas_vectorized", "udf_python_scalar",
-    "udf_table_function", "union_all", "union_distinct",
-    "unpivot_measures", "values_inline", "window_analytics",
-    "window_dense_ntile", "window_frames_rows", "window_ignore_nulls",
-    "window_range_frame", "window_rank_top1",
-    # r10 driver sample (CORRECTNESS_r10.json, 50 keys — external
-    # union now 201/219; the 18 still-fresh entries order first so
-    # the r11 sample completes external coverage):
-    "agg_hll_grouped", "agg_theta_intersection_matrix",
-    "ann_kmeans_converged", "ann_lsh_topk", "ann_topk_bruteforce",
-    "dedup_exact", "dedup_incremental", "dedup_lsh_quality",
-    "dedup_minhash_lsh", "dedup_minhash_lsh_capped",
-    "dedup_semantic_adaptive", "dedup_semantic_capped", "dedup_simhash",
-    "events_anomaly_mad", "events_sessionize", "events_window_tumble",
-    "fn_array_setops", "fn_calendar", "fn_posexplode", "fn_trig",
-    "fn_try_arithmetic", "fn_url", "join_anti", "join_inner_broadcast",
-    "join_inner_shuffle", "join_left_outer", "join_right_outer",
-    "join_self_alias", "join_theta", "pipeline_contamination_matrix",
-    "pipeline_dataset_card", "pipeline_dataset_diff",
-    "pipeline_multisignal_dedup", "pipeline_quality_buckets",
-    "sample_temperature", "text_bm25_topk", "text_boilerplate_score",
-    "text_fingerprint", "text_redact", "text_rule_filters",
-    "text_top_ngrams", "tpch_q11_full", "tpch_q11_shape",
-    "tpch_q16_full", "tpch_q16_shape", "tpch_q20_full",
-    "tpch_q20_shape", "tpch_q2_full", "tpch_q2_shape",
-    "window_cume_percent",
-    # r11 driver sample (CORRECTNESS_r11.json, 50 keys, 21 new —
-    # external union now 222/222: full coverage, so the fresh-first
-    # split is empty and ordering degenerates to plain epoch rotation):
-    "agg_kmv_quantiles", "dedup_band_stats", "dedup_clusters",
-    "dedup_containment", "dedup_embedding_cosine_capped",
-    "dedup_exact_normalized", "dedup_ngram_jaccard",
-    "dedup_simhash_pairs", "join_cross", "join_runtime_bloom",
-    "join_skew_salted", "tpch_q1", "tpch_q10", "tpch_q13", "tpch_q19",
-    "tpch_q22", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6", "tpch_q8",
-})
-
 
 def _interleaved_order(names: list[str], epoch: int) -> list[str]:
     """Deterministic family-interleaved ordering with epoch rotation.
@@ -202,8 +111,6 @@ def _interleaved_order(names: list[str], epoch: int) -> list[str]:
     sample walks different members every round while remaining fully
     reproducible from the committed epoch.
     """
-    if not names:
-        return []
     families: dict[str, list[str]] = {}
     for n in names:
         families.setdefault(n.split("_", 1)[0], []).append(n)
@@ -225,22 +132,11 @@ def _interleaved_order(names: list[str], epoch: int) -> list[str]:
 
 
 def all_specs() -> dict[str, QuerySpec]:
-    """All registry entries, never-externally-sampled first.
-
-    The external driver hash-checks a fixed-size prefix of this order,
-    so entries absent from ``EXTERNALLY_SAMPLED`` come first
-    (family-interleaved within, epoch-rotated) and already-sampled
-    entries after (same interleave). Each round's external sample is
-    thereby spent entirely on never-checked entries until the ledger
-    covers the whole registry."""
+    """All registry entries, family-interleaved and rotated by
+    ``ROTATION_EPOCH``: the external driver hash-checks a fixed-size
+    prefix of this order."""
     _load_all()
-    names = list(_REGISTRY)
-    fresh = [n for n in names if n not in EXTERNALLY_SAMPLED]
-    seen = [n for n in names if n in EXTERNALLY_SAMPLED]
-    order = (
-        _interleaved_order(fresh, ROTATION_EPOCH)
-        + _interleaved_order(seen, ROTATION_EPOCH)
-    )
+    order = _interleaved_order(list(_REGISTRY), ROTATION_EPOCH)
     return {n: _REGISTRY[n] for n in order}
 
 

@@ -178,48 +178,21 @@ def test_bench_data_hashes_fingerprint(tmp_path):
     assert bench.data_hashes(str(tmp_path))["a"] != h["a"]
 
 
-def test_driver_sample_window_is_never_sampled_first():
-    """The external correctness driver hash-checks exactly the first 50
-    ``queries()`` entries in dict iteration order. VERDICT r8 task 1:
-    blind epoch rotation decayed to ~14 fresh entries per round, so the
-    order is now ledger-driven — every entry the driver has never
-    hash-checked (absent from the committed union in
-    ``EXTERNALLY_SAMPLED``) comes FIRST, family-interleaved,
-    so the fixed-size sample window is spent entirely on fresh entries
-    until external coverage is total."""
+def test_driver_sample_order_is_family_interleaved():
+    """The external correctness driver hash-checks a fixed-size prefix
+    of ``queries()`` in dict iteration order. That order is the
+    registry's family interleave rotated by ``ROTATION_EPOCH``: names
+    are unique, and the first entries cover every operator family
+    before any family repeats."""
     from datafusion_dist_spark import registry
 
     names = list(registry.all_specs())
     assert len(names) == len(set(names))
-    ledger = registry.EXTERNALLY_SAMPLED
-    # The ledger must reference real registry entries (a renamed entry
-    # would silently count as never-sampled forever — harmless — but a
-    # stale ledger name means the union bookkeeping drifted).
-    assert not (ledger - set(names)), sorted(ledger - set(names))
-    fresh = [n for n in names if n not in ledger]
-    window = names[:50]
-    n_fresh_expected = min(50, len(fresh))
-    n_fresh_in_window = sum(1 for n in window if n not in ledger)
-    assert n_fresh_in_window == n_fresh_expected, (
-        f"only {n_fresh_in_window}/{n_fresh_expected} of the driver's "
-        f"sample window are never-externally-sampled entries"
+    assert names == registry._interleaved_order(
+        list(registry._REGISTRY), registry.ROTATION_EPOCH
     )
-    # All fresh entries strictly precede all already-sampled ones.
-    first_seen = next(
-        (i for i, n in enumerate(names) if n in ledger), len(names)
-    )
-    assert all(n in ledger for n in names[first_seen:])
-    # The fresh prefix stays family-interleaved (one entry per family
-    # before any family repeats), so a sample window smaller than the
-    # fresh set still spreads across operator families.
-    fresh_families = {n.split("_", 1)[0] for n in fresh}
-    head = names[: len(fresh_families)]
-    assert {n.split("_", 1)[0] for n in head} == fresh_families
-    # Rotation still reorders within the ledger partitions.
-    raw = list(registry._REGISTRY)
-    here = registry._interleaved_order(raw, registry.ROTATION_EPOCH)
-    next_round = registry._interleaved_order(raw, registry.ROTATION_EPOCH + 1)
-    assert set(here) == set(next_round) == set(names)
+    families = {n.split("_", 1)[0] for n in names}
+    assert {n.split("_", 1)[0] for n in names[: len(families)]} == families
 
 
 @pytest.mark.parametrize("module", _HARNESSES)

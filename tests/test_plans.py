@@ -38,6 +38,17 @@ def test_q6_filters_pushed_to_scan(spark):
     assert "l_shipdate" in plan.split("PushedFilters", 1)[1][:400], plan[:2000]
 
 
+def test_plan_facts_equal_across_builds(spark):
+    """Two builds of one query in one session give equal plan facts:
+    expression ids (``ScalarSubquery#54`` vs ``#68``) are not facts."""
+    from datafusion_dist_spark import registry
+
+    build = registry.all_specs()["subquery_scalar"].spark_fn
+    first = plan_facts(build(spark, SF_DIR))
+    assert first["pushed_filters"], first
+    assert first == plan_facts(build(spark, SF_DIR))
+
+
 def test_scan_prunes_columns(spark):
     df = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
     plan = formatted_plan(df)

@@ -493,6 +493,87 @@ def test_gc_never_sweeps_executing_pull(engine):
     assert entry.pulls_in_flight == 0
 
 
+def test_gc_never_sweeps_executing_collect(engine):
+    """``collect()`` is a pull like ``stream_arrow``: a collect slower
+    than the ttl keeps its registry row through every sweep fired while
+    it computes, and ends completed."""
+    import threading
+
+    # A fixed sleep, not a big scan: a scan's wall time shrinks with
+    # the cores at hand and can drop under the ttl.
+    @F.udf(T.LongType())
+    def slow(v):
+        time.sleep(1.0)
+        return v
+
+    handle = engine.submit_df(engine.spark.range(1).select(slow("id").alias("s")))
+    entry = handle._entry
+    got = {}
+    consumer = threading.Thread(target=lambda: got.update(rows=handle.collect()))
+    consumer.start()
+    deadline = time.monotonic() + 30
+    while entry.started_at is None and time.monotonic() < deadline:
+        time.sleep(0.002)
+    t0 = time.monotonic()
+    while consumer.is_alive():
+        engine.jobs.cleanup(ttl_seconds=0.2)
+        consumer.join(timeout=0.02)
+    assert time.monotonic() - t0 > 0.2, "collect was not slower than the ttl"
+    assert len(got["rows"]) == 1
+    assert any(e is entry for e in engine.jobs.all())
+    assert entry.status == "completed"
+    assert entry.pulls_in_flight == 0
+
+
+def test_stream_resumed_on_another_thread_stays_in_job_group(engine):
+    """Spark's job group is a per-thread property. A stream whose
+    first partition is pulled on one thread and the rest on another
+    (a consumer iterating in a thread pool) still runs every
+    partition's job in its job group."""
+    import threading
+
+    handle = engine.submit("SELECT id FROM range(0, 3000, 1, 3)")
+    stream = handle.stream_arrow()
+    next(stream)
+    rest = threading.Thread(target=lambda: list(stream))
+    rest.start()
+    rest.join(timeout=60)
+    tracker = engine.spark.sparkContext.statusTracker()
+    assert handle._entry.status == "completed"
+    assert len(tracker.getJobIdsForGroup(handle._entry.spark_job_group)) == 3
+
+
+def test_failed_partition_pull_is_recorded(engine):
+    """A per-partition pull whose final stage raises leaves the job
+    failed with the error, as a failed ``stream_arrow`` does — not
+    ``running`` until GC."""
+    handle = engine.submit(
+        "SELECT IF(id >= 0, raise_error('boom'), id) AS x FROM range(10)"
+    )
+    assert handle.materialize_partitions() >= 1
+    with pytest.raises(Exception, match="boom"):
+        list(handle.stream_partition(0))
+    assert handle._entry.status == "failed"
+    assert "boom" in handle._entry.error
+
+
+def test_closed_partition_pull_keeps_other_pulls_in_flight(engine):
+    """Closing one per-partition stream at a batch boundary releases
+    only its own in-flight mark: another pull of the same job that is
+    still computing stays exempt from the TTL sweep."""
+    handle = engine.submit("SELECT id FROM range(0, 4000, 1, 2)")
+    assert handle.materialize_partitions(batch_rows=100) == 2
+    entry = handle._entry
+    stream = handle.stream_partition(0)
+    next(stream)
+    engine.jobs.begin_pull(entry)  # partition 1's pull, still computing
+    stream.close()
+    assert entry.pulls_in_flight == 1
+    assert engine.jobs.cleanup(ttl_seconds=0) == 0
+    engine.jobs.end_pull(entry)
+    assert entry.pulls_in_flight == 0
+
+
 def test_retry_after_abandonment_reports_completed(engine):
     """A transiently-broken first pull marks the job abandoned
     (provisional failure); the retrying client's successful second

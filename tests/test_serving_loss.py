@@ -6,8 +6,8 @@ The reference's data plane treats mid-stream node death as a
 first-class failure: its network tier retries pulls with backoff
 (``networks/tonic/src/network.rs:196-229``) and a stage re-pull
 re-runs only the lost partitions. The Spark analog under test: the
-server's ``stream_arrow`` walks the result with ``toLocalIterator``
-(one partition at a time), so a kill after the first batch lands
+server's ``stream_arrow`` walks the result one final partition at a
+time (one Spark job each), so a kill after the first batch lands
 while most partitions — and half the shuffle map outputs, which die
 with the executor — are still pending. Spark must absorb it
 (ExecutorLostFailure retries + FetchFailed map-stage resubmission)

@@ -42,47 +42,11 @@ from tools_standalone import StandaloneCluster, free_port, session_env
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# Plan-shape anchors that ALWAYS run regardless of the ledger slice:
-# a shuffle join and a banded-LSH dedup (Python workers + multi-stage
-# shuffles) — the two standalone-deployment paths a slice of
-# single-scan aggregates would leave untested.
-ANCHORS = ["join_inner_shuffle", "dedup_minhash_lsh_capped"]
-
-
-def _ledger_slice(n: int = 5) -> list[str]:
-    """Registry slice for the standalone rehearsal, drawn from the
-    never-externally-sampled ledger (VERDICT r8 task 5) so the
-    deployment-shape test and the external-coverage goal compound:
-    entries are taken from BEYOND the driver's 50-entry sample window
-    (those inside it get externally checked this round anyway), one
-    per operator family, oracle-bearing only (the test compares
-    against DuckDB). Deterministic given the committed ledger +
-    rotation epoch; falls back into the window if fewer than ``n``
-    fresh families remain beyond it."""
-    from datafusion_dist_spark import registry
-
-    specs = registry.all_specs()
-    names = list(specs)
-    ledger = registry.EXTERNALLY_SAMPLED
-    pool = [
-        nm
-        for nm in names[50:] + names[:50]
-        if nm not in ledger and specs[nm].oracle is not None
-    ]
-    out: list[str] = []
-    fams: set[str] = set()
-    for nm in pool:
-        fam = nm.split("_", 1)[0]
-        if fam in fams or nm in ANCHORS:
-            continue
-        fams.add(fam)
-        out.append(nm)
-        if len(out) == n:
-            break
-    return out
-
-
-ENTRIES = ANCHORS + _ledger_slice()
+# The registry entries the rehearsal runs: a shuffle join and a
+# banded-LSH dedup (Python workers + multi-stage shuffles) — the two
+# standalone-deployment paths a slice of single-scan aggregates would
+# leave untested.
+ENTRIES = ["join_inner_shuffle", "dedup_minhash_lsh_capped"]
 
 _QUERY_SCRIPT = r"""
 import os, sys
