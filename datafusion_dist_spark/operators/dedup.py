@@ -20,7 +20,7 @@ oracle reproduces every value bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from datafusion_dist_spark.functions.hashing import (
@@ -1257,10 +1257,12 @@ def duplicate_clusters(
     — which doubles how far labels have propagated, so a chain of
     length L converges in O(log L) rounds (neighbor-min alone is one
     hop per round: a 20-node chain would silently exhaust the loop).
-    Early exit when a round changes nothing; ``localCheckpoint`` cuts
-    the lineage so plans stay constant-size (at cluster scale use a
-    checkpoint dir). Raises if the loop exhausts without converging —
-    wrong labels must never be returned silently.
+    Early exit when a round changes nothing: the number of changed
+    labels is observed (``DataFrame.observe``) inside the same job as
+    the eager ``localCheckpoint``, so a round runs no separate count.
+    The checkpoint cuts the lineage so plans stay constant-size (at
+    cluster scale use a checkpoint dir). Raises if the loop exhausts
+    without converging — wrong labels must never be returned silently.
 
     Returns (doc_id, cluster_id); singletons are absent (a doc with no
     pair is its own implicit cluster).
@@ -1301,6 +1303,7 @@ def duplicate_clusters(
         lab2 = hop.select(
             F.col("node").alias("l_node"), F.col("label").alias("l_label")
         )
+        obs = Observation()
         updated = (
             hop.join(lab2, hop.label == lab2.l_node, "left_outer")
             .select(
@@ -1310,8 +1313,14 @@ def duplicate_clusters(
                 ),
                 "old_label",
             )
+            .observe(
+                obs,
+                F.sum(
+                    (F.col("new_label") != F.col("old_label")).cast("long")
+                ).alias("changed"),
+            )
         ).localCheckpoint(eager=True)
-        changed = updated.filter(F.col("new_label") != F.col("old_label")).count()
+        changed = obs.get["changed"] or 0
         labels = updated.select("node", F.col("new_label").alias("label"))
         if changed == 0:
             return labels.select(

@@ -455,10 +455,11 @@ def kmeans_refine_step(
     moments, applied to k-means.
 
     Plan shape at 100 TB: one scan of the vector table; the scorer is
-    an Arrow-batched numpy projection; posexplode fans each row into
-    dim (cid, dim, micro) tuples; ONE two-phase aggregation keyed by
-    (cid, dim) — K*dim final groups, so the reduce side is trivially
-    small no matter the corpus size.
+    an Arrow-batched numpy projection; the argmax runs once per vector,
+    in a Project below the Generate; posexplode then fans each row into
+    dim (cid, dim, micro) tuples that carry ``cid`` as a plain column;
+    ONE two-phase aggregation keyed by (cid, dim) — K*dim final groups,
+    so the reduce side is trivially small no matter the corpus size.
 
     Returns (cid, dim, centroid, n_members): dim is 1-based,
     ``centroid`` the refined per-dimension mean rounded to 6dp.
@@ -496,11 +497,14 @@ def kmeans_refine_step(
     # reasoning optimized away the one shuffle that buys 16x map
     # parallelism; spread() skips itself when the input is already
     # parallel (the 100 TB case), so only under-parallel inputs pay.
-    assigned = spread(embeddings).select(
-        F.col("embedding"), scorer(F.col("embedding")).alias("s")
-    ).select(
-        _rounded_argmax_cid(cent_rows).alias("cid"),
-        F.posexplode("embedding").alias("i", "x"),
+    # The argmax gets its own select below the posexplode: Spark
+    # evaluates an expression that shares a select with a generator in
+    # the Project ABOVE the Generate, i.e. once per exploded component.
+    assigned = (
+        spread(embeddings)
+        .select(F.col("embedding"), scorer(F.col("embedding")).alias("s"))
+        .select(_rounded_argmax_cid(cent_rows).alias("cid"), "embedding")
+        .select("cid", F.posexplode("embedding").alias("i", "x"))
     )
     return _fixed_point_means(assigned)
 
@@ -581,7 +585,9 @@ def _kmeans_refine_dyn(vecs: DataFrame, cb: DataFrame) -> DataFrame:
     and the argmax is the same round-to-6dp / min-cid tiebreak as
     ``_rounded_argmax_cid``, written over the zipped (csims, cids)
     arrays — bit-identical assignment to the literal-codebook round by
-    construction."""
+    construction. As there, the (interpreted) ``zip_with`` argmax is
+    computed once per vector, below the Generate that explodes the
+    components."""
     scorer = _numpy_dyn_scorer()
     best = F.expr(
         "array_max(zip_with(csims, ccids, (s, c) -> "
@@ -596,8 +602,9 @@ def _kmeans_refine_dyn(vecs: DataFrame, cb: DataFrame) -> DataFrame:
         )
         .select(
             F.coalesce(-best["ncid"], F.lit(-1).cast("bigint")).alias("cid"),
-            F.posexplode("embedding").alias("i", "x"),
+            "embedding",
         )
+        .select("cid", F.posexplode("embedding").alias("i", "x"))
     )
     return _fixed_point_means(assigned)
 

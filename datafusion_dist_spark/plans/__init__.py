@@ -125,3 +125,45 @@ def executed_scan_facts(df: DataFrame, descend_cached: bool = True) -> dict:
 
     walk(df._jdf.queryExecution().executedPlan())  # type: ignore[attr-defined]
     return counts
+
+
+def exprs_above_generate(df: DataFrame) -> list[str]:
+    """Expressions evaluated once per GENERATED row that need not be.
+
+    Spark puts every expression that shares a ``select`` with a
+    generator (``explode``, ``posexplode``, ...) into the Project above
+    the ``Generate``, so it runs once per exploded element rather than
+    once per input row. Walks the optimized logical plan and returns,
+    for each Project directly above a Generate, every non-attribute
+    expression that reads no generator output — work that could have
+    been computed below the Generate. An alias of a plain column is a
+    rename, not work, and is not returned. Expression ids are stripped.
+    """
+
+    def scala_list(seq) -> list:
+        return [seq.apply(i) for i in range(seq.size())]
+
+    found: list[str] = []
+
+    def walk(node) -> None:
+        children = scala_list(node.children())
+        if (
+            node.getClass().getSimpleName() == "Project"
+            and children[0].getClass().getSimpleName() == "Generate"
+        ):
+            gen_ids = {
+                a.exprId().id()
+                for a in scala_list(children[0].generatorOutput())
+            }
+            for ne in scala_list(node.projectList()):
+                inner = ne.child() if ne.getClass().getSimpleName() == "Alias" else ne
+                if inner.getClass().getSimpleName() == "AttributeReference":
+                    continue
+                refs = scala_list(ne.references().toSeq())
+                if not any(r.exprId().id() in gen_ids for r in refs):
+                    found.append(re.sub(r"#\d+L?", "", ne.toString()))
+        for child in children:
+            walk(child)
+
+    walk(df._jdf.queryExecution().optimizedPlan())  # type: ignore[attr-defined]
+    return found

@@ -277,6 +277,33 @@ def test_duplicate_clusters_long_chain_converges(spark):
     )[:5]
 
 
+def test_duplicate_clusters_raises_when_not_converged(spark):
+    """A 30-edge chain needs more than one round: with max_iters=1 the
+    loop must raise rather than return partial labels."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "a_id long, b_id long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        dedup.duplicate_clusters(pairs, max_iters=1)
+
+
+def test_duplicate_clusters_counts_changes_inside_checkpoint(spark, monkeypatch):
+    """Convergence is observed inside each round's checkpoint job: the
+    loop issues no separate count() action."""
+
+    def no_count(self):
+        raise AssertionError("duplicate_clusters ran a separate count()")
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)] + [(100, 200)], "a_id long, b_id long"
+    )
+    monkeypatch.setattr(type(pairs), "count", no_count)
+    out = dedup.duplicate_clusters(pairs)
+    monkeypatch.undo()
+    got = {r.doc_id: r.cluster_id for r in out.collect()}
+    assert got == {**{i: 0 for i in range(31)}, 100: 100, 200: 100}, got
+
+
 def test_redact_escapes_regex_metacharacters(spark):
     from datafusion_dist_spark.operators.text import redact
 

@@ -232,6 +232,29 @@ def test_kmeans_refine_single_exchange(spark):
     assert facts["partial_aggregate"], facts
 
 
+def test_kmeans_argmax_once_per_vector(spark):
+    """The k-means assignment (argmax over the centroid scores) must be
+    computed once per vector, below the posexplode — not in the Project
+    above the Generate, where it runs once per exploded component. The
+    synthetic frame checks the guard sees the shape it is looking for."""
+    from datafusion_dist_spark import registry
+    from datafusion_dist_spark.plans import exprs_above_generate
+
+    demo = spark.createDataFrame([(1, [1.0, 2.0])], "id long, v array<double>")
+    assert exprs_above_generate(
+        demo.select((F.col("id") * 2).alias("k"), F.posexplode("v"))
+    )
+    assert not exprs_above_generate(
+        demo.select((F.col("id") * 2).alias("k"), "v").select(
+            "k", F.posexplode("v")
+        )
+    )
+    specs = registry.all_specs()
+    for name in ("ann_kmeans_refine", "ann_kmeans_two_rounds", "ann_kmeans_converged"):
+        df = specs[name].spark_fn(spark, SF_DIR)
+        assert exprs_above_generate(df) == [], name
+
+
 def test_keep_best_broadcasts_pair_stats(spark):
     """Cluster keep-selection: the cluster labels (tiny) broadcast
     onto the corpus join; at most the window + count aggregation

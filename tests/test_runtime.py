@@ -214,8 +214,8 @@ def test_health_check_responsive_under_cpu_load(spark, engine):
 
     def run_heavy():
         # Local properties are thread-local: this thread's job lands in
-        # the FAIR 'heavy' pool, exactly what JobHandle does for
-        # pool-tagged submits.
+        # a FAIR 'heavy' pool set by hand here. No engine path sets a
+        # pool; every engine pull runs in the 'default' pool.
         sc = engine.spark.sparkContext
         sc.setLocalProperty("spark.scheduler.pool", "heavy")
         heavy_df.agg(F.sum("b")).collect()
