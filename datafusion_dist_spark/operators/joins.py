@@ -106,20 +106,3 @@ def salted_join(
     )
     return joined.drop("_salt")
 
-
-def skew_stats(df: DataFrame, key: str, top: int = 5) -> DataFrame:
-    """Per-key frequency for skew diagnosis: the planning input for
-    choosing between AQE skew-split, salting, and broadcast.
-
-    One scan: the total row count is derived from the per-key counts
-    (a one-row aggregate cross-joined back) instead of a second
-    ``df.count()`` pass over the full table."""
-    counts = df.groupBy(key).agg(F.count("*").alias("cnt"))
-    total = counts.agg(F.sum("cnt").alias("_n"))
-    return (
-        counts.crossJoin(F.broadcast(total))
-        .withColumn("fraction", F.round(F.col("cnt") / F.col("_n").cast("double"), 6))
-        .drop("_n")
-        .orderBy(F.col("cnt").desc(), F.col(key).asc())
-        .limit(top)
-    )

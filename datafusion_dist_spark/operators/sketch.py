@@ -358,29 +358,6 @@ def kmv_sketch(
     )
 
 
-def kmv_merge(sketches: DataFrame, group_col: str, k: int = KMV_K) -> DataFrame:
-    """Merge KMV sketch tables (the distributed/streaming aggregate
-    step): the k smallest distinct hashes of A ∪ B are exactly the
-    re-ranked k smallest of sketch(A) ∪ sketch(B), so shards/batches
-    sketch independently and a bounded k-row merge reproduces the
-    global sketch bit-for-bit (property-tested merge-equals-rebuild;
-    measured as a bounded-state streaming mode in bench_streaming).
-    ``sketches``: a union of ``kmv_sketch`` outputs (``rn`` columns,
-    if present, are recomputed — a hash retained by one shard may be
-    displaced in the merged ranking). Input hashes are already below
-    each shard's theta, so the merge never needs the raw keys; state
-    is ≤ groups*k rows forever."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(group_col).orderBy("h")
-    return (
-        sketches.select(group_col, "h")
-        .distinct()
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-    )
-
-
 def kmv_sketch_oracle(
     key_expr: str, table_sql: str, group_col: str, k: int = KMV_K
 ) -> str:
@@ -697,26 +674,6 @@ def kmv_quantile_sketch(
     w = Window.partitionBy(group_col).orderBy("h", "v")
     return (
         rows.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-    )
-
-
-def kmv_quantile_merge(
-    sketches: DataFrame, group_col: str, k: int = KMV_K
-) -> DataFrame:
-    """Merge quantile-sketch tables (shards / streaming batches): the
-    bottom-k of a union under the (h, v) total order is the re-ranked
-    bottom-k of each part's bottom-k, so the merge reproduces the
-    full-data build bit-for-bit (property-tested), and the distinct
-    on (group, h, v) makes replayed shards idempotent. State stays
-    <= groups*k rows forever — same contract as ``kmv_merge``."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(group_col).orderBy("h", "v")
-    return (
-        sketches.select(group_col, "h", "v")
-        .distinct()
-        .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
     )
 

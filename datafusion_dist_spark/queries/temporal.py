@@ -1,11 +1,8 @@
 """Event-time operators over the ``events`` table.
 
 The reference has no stream-time semantics ("streaming" there means
-pipelined delivery, SURVEY §1.4) — these are engine extensions. Each
-batch query here has a Structured-Streaming twin in
-``datafusion_dist_spark/streaming/`` (same logical plan run with
-``readStream`` + watermark); the batch form is what the DuckDB oracle
-verifies.
+pipelined delivery, SURVEY §1.4) — these are engine extensions, batch
+queries that the DuckDB oracle verifies.
 
 Scale notes: tumbling windows are a pure groupBy on a derived key (no
 extra shuffle vs any agg); the as-of join uses max_by within an

@@ -69,14 +69,6 @@ def test_salt_column_excludes_nested_maps(spark):
         joins.salt_column(df.select("m", "am", "sm"), 4)
 
 
-def test_skew_stats(spark):
-    e = load_table(spark, SF_DIR, "events")
-    top = joins.skew_stats(e, "event_type", top=3).collect()
-    assert len(top) == 3
-    assert top[0].cnt >= top[1].cnt >= top[2].cnt
-    assert 0 < top[0].fraction <= 1
-
-
 def test_minhash_lsh_finds_planted_near_dups(spark):
     """Plant a near-duplicate (one token changed) and an exact dup;
     LSH must surface both pairs with sensible estimates."""
@@ -2129,33 +2121,6 @@ def test_kmv_exact_mode_under_k_distinct(spark):
     assert r["est_rse"] == 0.0  # exact pair: zero sampling error
 
 
-def test_kmv_sketch_merge_equals_rebuild(spark):
-    """KMV sketches are mergeable the way HLL registers are max-
-    mergeable: the k smallest distinct hashes of A ∪ B equal the
-    re-ranked k smallest of (sketch(A) ∪ sketch(B)) — the property
-    that makes the sketch a distributed/streaming aggregate (shards
-    sketch independently; a k-row merge reproduces the global
-    sketch). Split events by user hash parity and verify the merge
-    against the full-corpus build bit-for-bit — through the SHIPPED
-    merge step (kmv_merge, the same fold the streaming mode applies
-    per batch), not a test-local reimplementation."""
-    from datafusion_dist_spark.operators import sketch
-
-    ev = load_table(spark, SF_DIR, "events").select("event_type", "user_id")
-    half_a = ev.where(F.pmod(F.col("user_id"), F.lit(2)) == 0)
-    half_b = ev.where(F.pmod(F.col("user_id"), F.lit(2)) == 1)
-    merged = sketch.kmv_merge(
-        sketch.kmv_sketch(half_a, "user_id", "event_type").unionByName(
-            sketch.kmv_sketch(half_b, "user_id", "event_type")
-        ),
-        "event_type",
-    )
-    full = sketch.kmv_sketch(ev, "user_id", "event_type")
-    want = {(r["event_type"], r["h"], r["rn"]) for r in full.collect()}
-    got = {(r["event_type"], r["h"], r["rn"]) for r in merged.collect()}
-    assert got == want
-
-
 def test_theta_intersection_tracks_exact_overlap(spark):
     """The theta estimates must track the exact pairwise overlap in
     SKETCH mode — a planted corpus with >k distinct keys per group
@@ -2361,54 +2326,6 @@ def test_countmin_lookup_rejects_grouped_grid(spark):
     )
     with pytest.raises(ValueError, match="ungrouped"):
         sketch.countmin_lookup(ev.select("user_id").distinct(), grouped, "user_id")
-
-
-def test_kmv_quantile_merge_equals_rebuild(spark):
-    """The quantile sketch's bottom-k row sample under the (h, v)
-    total order is mergeable exactly like the distinct-key KMV: the
-    re-ranked bottom-k of two shards' bottom-k equals the full-data
-    build bit-for-bit, and replaying a shard changes nothing (the
-    merge's distinct on (group, h, v) absorbs it) — the property
-    that makes the sketch a distributed/streaming aggregate, checked
-    through the SHIPPED merge step."""
-    from datafusion_dist_spark.operators import sketch
-
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        "l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice"
-    )
-    rid = F.concat_ws(
-        "|",
-        F.col("l_orderkey").cast("string"),
-        F.col("l_linenumber").cast("string"),
-    )
-    v = F.round(F.col("l_extendedprice") * 100).cast("bigint")
-
-    def sk_of(df):
-        return sketch.kmv_quantile_sketch(df, rid, v, "l_returnflag")
-
-    half_a = li.where(F.pmod(F.col("l_orderkey"), F.lit(2)) == 0)
-    half_b = li.where(F.pmod(F.col("l_orderkey"), F.lit(2)) == 1)
-    merged = sketch.kmv_quantile_merge(
-        sk_of(half_a).unionByName(sk_of(half_b)), "l_returnflag"
-    )
-    full = sk_of(li)
-    want = {
-        (r["l_returnflag"], r["h"], r["v"], r["rn"])
-        for r in full.collect()
-    }
-    got = {
-        (r["l_returnflag"], r["h"], r["v"], r["rn"])
-        for r in merged.collect()
-    }
-    assert got == want
-    replayed = sketch.kmv_quantile_merge(
-        full.unionByName(sk_of(half_a)), "l_returnflag"
-    )
-    got_replay = {
-        (r["l_returnflag"], r["h"], r["v"], r["rn"])
-        for r in replayed.collect()
-    }
-    assert got_replay == want
 
 
 def test_kmv_quantiles_exact_mode(spark):

@@ -5,6 +5,7 @@ change; a pure rename is no regeneration, and files outside
 
 from __future__ import annotations
 
+import os
 import subprocess
 
 import pytest
@@ -57,3 +58,13 @@ def test_root_driver_files_never_listed(repo):
     _git(repo, "add", "-A")
     _git(repo, "commit", "-q", "-m", "driver files")
     assert list(rc.check(str(repo))["artifacts"]) == ["artifacts/X.json"]
+
+
+def test_measured_source_paths_exist():
+    """A deleted harness must leave the list too: a pathspec that
+    matches nothing drops out of ``git log`` silently."""
+    missing = [
+        p for p in rc.MEASURED_SOURCE
+        if not os.path.exists(os.path.join(rc.REPO, p))
+    ]
+    assert missing == []

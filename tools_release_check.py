@@ -47,7 +47,6 @@ MEASURED_SOURCE = [
     "bench_index.py",
     "bench_memory.py",
     "bench_scale.py",
-    "bench_streaming.py",
     "tools_driver_sim.py",
     "tools_f3_compare.py",
     "tools_profile_queries.py",
