@@ -127,7 +127,7 @@ HEADLINE = [
     # intersection sampling beside the HLL inclusion-exclusion)
     "agg_theta_intersection_matrix",
     # r11 addition: per-band HLL compaction driving measured
-    # bucket_cap selection for the minhash index
+    # bucket_cap selection
     "dedup_band_stats",
     # r11 additions: quantile axis of the sketch family + Catalyst's
     # runtime Bloom-filter join pruning
@@ -417,13 +417,14 @@ def main() -> None:
         # A query is "warm" when any of its passes was served in part
         # by the cross-query session cache (the minhash / ngram-truth
         # pair sets, the plan-keyed graph/sketch tables, the IVF
-        # probe memo): its number is a PIPELINE-STAGE cost — the
+        # probe memo, and the query-parameter memos — planted-id
+        # offsets, the one-row query vector, the dim-table guard):
+        # part of its number may be a PIPELINE-STAGE cost — the
         # derivation cost lands in whichever query built the cache
         # first — not a standalone cost (VERDICT r11 "what's wrong" #2
-        # / task 6). Cheap query-parameter memos (the planted-id
-        # offset, the one-row query vector) deliberately do NOT count:
-        # they shave a sub-10 ms lookup job that exists in nearly
-        # every dedup entry and would make the flag uninformative.
+        # / task 6). A query-parameter hit saves only a small lookup
+        # job, so most entries that read one are warm from their
+        # second pass on.
         warm[name] = session_cache_hits() > hits0
         samples[name] = runs
         timings[name] = min(runs)

@@ -9,6 +9,7 @@ at a distributed store and every operator below still works.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import pathlib
 import tempfile
@@ -75,10 +76,13 @@ def pin_session_confs(spark: SparkSession) -> None:
     rules = [r for r in existing.split(",") if r]
     if _rule not in rules:
         rules.append(_rule)
-    spark.conf.set("spark.sql.optimizer.excludedRules", ",".join(rules))
+        spark.conf.set("spark.sql.optimizer.excludedRules", ",".join(rules))
     _ship_package(spark)
 
 
+# Applications this process already shipped the package to: gates
+# ``addPyFile`` to once per application. It holds no query value, so it
+# stays outside the session cache.
 _SHIPPED_APPS: set[str] = set()
 
 
@@ -90,22 +94,36 @@ def _ship_package(spark: SparkSession) -> None:
     driver's session is not ours — its cwd/PYTHONPATH may not reach this
     repo — and on a real cluster executors share no filesystem with the
     driver at all. One zip per session makes both cases work.
+
+    The zip is named by a hash of the packaged sources (relative path
+    and bytes of each ``.py``), so every driver process running one
+    code version shares one file in the temp dir and a given name
+    always holds the same code.
     """
     app_id = spark.sparkContext.applicationId
     if app_id in _SHIPPED_APPS:
         return
     pkg_dir = pathlib.Path(__file__).resolve().parent
+    sources = [
+        (str(pkg_dir.name / p.relative_to(pkg_dir)), p.read_bytes())
+        for p in sorted(pkg_dir.rglob("*.py"))
+    ]
+    digest = hashlib.sha256()
+    for arcname, data in sources:
+        digest.update(f"{arcname}\0{len(data)}\0".encode())
+        digest.update(data)
     zpath = os.path.join(
-        tempfile.gettempdir(), f"datafusion_dist_spark_{os.getpid()}.zip"
+        tempfile.gettempdir(),
+        f"datafusion_dist_spark_{digest.hexdigest()[:16]}.zip",
     )
-    # Always rebuild, atomically (write-aside + rename): a leftover zip
-    # from a recycled pid would ship STALE code to executors, and a
-    # concurrent builder must never expose a half-written archive.
-    tmp = f"{zpath}.{uuid.uuid4().hex}.tmp"
-    with zipfile.ZipFile(tmp, "w") as z:
-        for p in sorted(pkg_dir.rglob("*.py")):
-            z.write(p, arcname=str(pkg_dir.name / p.relative_to(pkg_dir)))
-    os.replace(tmp, zpath)
+    if not os.path.exists(zpath):
+        # Write-aside + rename: a concurrent builder must never expose
+        # a half-written archive.
+        tmp = f"{zpath}.{uuid.uuid4().hex}.tmp"
+        with zipfile.ZipFile(tmp, "w") as z:
+            for arcname, data in sources:
+                z.writestr(arcname, data)
+        os.replace(tmp, zpath)
     spark.sparkContext.addPyFile(zpath)
     _SHIPPED_APPS.add(app_id)
 

@@ -45,54 +45,6 @@ from datafusion_dist_spark.operators.common import quadratic_pin_guard, spread
 # per-(band,bucket) head rank cap.
 DEFAULT_MAX_LIST_LEN = 100
 DEFAULT_BUCKET_CAP = 16
-# Pruned-vs-flat auto-select thresholds for band-bucketed index reads
-# (``minhash_dedup_pairs_prebuilt``). Pruning costs one fixed
-# driver-side key-collect job (~1-2 s: the batch's own sketch runs
-# once just to enumerate its (band_id, bk) pairs); it pays off once
-# the unpruned scan it avoids is bigger than that — large BYTES (scan
-# time) or many FILES (per-file open cost). Measured (bench_index.py,
-# BENCH_INDEX_r07, synthetic banded rows, 128 buckets = 514 files):
-# point-lookup pruned-vs-unpruned 2.6 s vs 2.9 s at 116 MB, 2.8 vs
-# 3.9 at 578 MB, 2.6 vs 8.4 at 2.3 GB — the pruned wall is CONSTANT
-# while the scan grows, and it already edges ahead at ~100 MB / ~500
-# files. Thresholds sit just under that first measured win; below
-# them (tiny test corpora, 16-64 dirs) the collect job dominates and
-# the flat scan is served directly.
-PRUNE_MIN_INDEX_BYTES = 64 << 20
-PRUNE_MIN_INDEX_FILES = 256
-# Build-time twin of the read-side auto-select: band_buckets="auto"
-# picks the layout from the corpus size before writing. ~145 B per
-# banded parquet row measured (bench_index: 116 MB / 800k rows).
-# The build-time flip threshold is SEPARATE from (and higher than)
-# the read-side PRUNE_MIN_INDEX_BYTES: the read thresholds answer
-# "given a bucketed layout, is pruning worth its fixed key-collect
-# job?" while the build threshold answers "is the bucketed layout the
-# faster SERVING layout at all?" — and BENCH_INDEX_r07 measured the
-# unpartitioned flat layout serving point lookups faster up to
-# 578 MB (flat 2.3 s vs pruned 2.7 s) with the pruned read only
-# winning by 2.3 GB (flat 7.9 s vs pruned 2.7 s, constant). The
-# crossover sits between those two points; 1 GiB is just past the
-# last measured flat win. 128 buckets is the measured serving config
-# (pruned point-lookup wall constant ~2.7 s to at least 2.3 GB).
-EST_BANDED_ROW_BYTES = 145
-BUCKET_MIN_INDEX_BYTES = 1 << 30
-DEFAULT_BAND_BUCKETS = 128
-# Per-index-path memo for the read-side auto-select:
-# path -> (freshness_token, (bytes, files)). The FS content summary is
-# one cheap RPC on HDFS but a full recursive listing on local/object-
-# store filesystems, and the continuous-crawl serving loop calls the
-# prebuilt read once per microbatch. Freshness is proven by the root
-# _SUCCESS marker's (mtime, len) — Spark's commit protocol rewrites it
-# on every successful write into the directory FROM ANY PROCESS, so a
-# cross-process append flips the pruned-vs-flat choice on the next
-# read (one stat) instead of waiting for a restart (the r7 staleness
-# gap; same discipline as similarity._freshness_token). A token of None
-# (no _SUCCESS: non-Spark writer / marker disabled) disables the memo
-# for that path — correctness of the CHOICE degrades to one recursive
-# listing per read, never to a stale answer. Out-of-band changes that
-# do not go through a Spark write job (e.g. hand-padding files) still
-# need an explicit pop, as tests/test_plans.py documents.
-_INDEX_SCALE_CACHE: dict[str, tuple[tuple[int, int], tuple[int, int]]] = {}
 # Sentinel distinguishing "not passed" from an explicit None opt-out
 # (minhash's default depends on the dedup mode — see
 # ``minhash_dedup_pairs``).
@@ -274,10 +226,8 @@ def minhash_dedup_pairs(
     pass: ``docs`` is index ∪ batch with disjoint id ranges (index ids
     < split_id ≤ batch ids), and the band join pairs index docs with
     batch docs only (a = index, b = new), never index-index or
-    batch-batch. Same single computed signature subtree; at 100 TB the
-    index side's signatures come from storage instead of recompute,
-    but the join shape — one banded equi-join, no all-pairs — is
-    identical.
+    batch-batch. Same single computed signature subtree and the same
+    join shape — one banded equi-join, no all-pairs.
 
     ``bucket_cap`` is the HOT-BUCKET skew guard. Banded LSH's one
     genuine scale pathology is a large near-identical cluster
@@ -294,18 +244,14 @@ def minhash_dedup_pairs(
     representative's star. Deterministic (rank = doc_id order), so
     the SQL oracle replays it exactly; same discipline as the
     ABSOLUTE n-gram posting-list cap (relative caps re-grow with the
-    corpus and trend quadratic — measured r4). Self/union dedup only;
-    the prebuilt-index path keeps cap=None (its index/batch frames
-    are ranked separately, so a global rank is not well-defined
-    there).
+    corpus and trend quadratic — measured r4). Self/union dedup only.
 
     Defaults (r6): for SELF/union dedup the cap defaults ON
     (``DEFAULT_BUCKET_CAP``) — the no-arg call must survive a real
     crawl's template cluster; pass ``bucket_cap=None`` for the exact
     uncapped pair listing (the registry's ``dedup_minhash_lsh``
     oracle pin). In incremental mode (``split_id`` set) the default
-    stays None so the inline path remains bit-identical to
-    ``minhash_dedup_pairs_prebuilt``, which cannot rank globally.
+    stays None, kept so existing results stay identical.
 
     ``bucket_cap="measured"`` selects the cap from the corpus's OWN
     band-bucket cardinality (one bounded register pass — see
@@ -313,8 +259,7 @@ def minhash_dedup_pairs(
     corpus whose typical bucket legitimately holds more than
     DEFAULT_BUCKET_CAP members keeps its recall (headroom x the
     measured mean), while per-bucket work stays bounded by
-    MAX_BUCKET_CAP². Equal by construction to the zero-cost
-    ``select_bucket_cap`` read of an index's ingest-time sidecar.
+    MAX_BUCKET_CAP².
     """
     if bucket_cap is _UNSET:
         bucket_cap = DEFAULT_BUCKET_CAP if split_id is None else None
@@ -342,10 +287,8 @@ def minhash_dedup_pairs(
     if bucket_cap == "measured":
         # Measured-cardinality cap selection (VERDICT r10 task 5): one
         # bounded register pass over the banded frame (bands x 2^p
-        # rows to the driver), the same selection select_bucket_cap
-        # reads at zero cost from an index's ingest-time sidecar —
-        # tested equal. Headroom x the measured mean bucket size,
-        # clamped to [DEFAULT_BUCKET_CAP, MAX_BUCKET_CAP].
+        # rows to the driver). Headroom x the measured mean bucket
+        # size, clamped to [DEFAULT_BUCKET_CAP, MAX_BUCKET_CAP].
         caps = [
             r["bucket_cap"]
             for r in band_stats_from_registers(
@@ -395,9 +338,8 @@ def _band_pair_estimates(
     on (band_id, band_key), Jaccard estimated as the
     matching-signature-component fraction from the sig arrays both
     sides already carry, per-pair dedup over primitive columns only.
-    ``a``/``b`` must be aliased "a"/"b" by the caller (same banded
-    frame for self/union dedup, storage-vs-computed frames for the
-    prebuilt-index path). ``bucket_cap`` requires the caller to have
+    ``a``/``b`` must be aliased "a"/"b" by the caller (the same banded
+    frame). ``bucket_cap`` requires the caller to have
     ranked the banded frame (``rn`` per bucket, doc_id order) and adds
     the hot-bucket guard predicate — see ``minhash_dedup_pairs``."""
     if split_id is None:
@@ -437,240 +379,18 @@ def _band_pair_estimates(
     )
 
 
-def minhash_index_build(
-    docs: DataFrame,
-    path: str,
-    k: int = 3,
-    bands: int = 4,
-    rows_per_band: int = 4,
-    band_buckets: int | None | str = None,
-) -> str:
-    """Ingest-time half of incremental/streaming MinHash dedup: sketch
-    the corpus ONCE (shingle → signature → banding) and persist the
-    banded signature table — what ``minhash_dedup_pairs``'s docstring
-    promises ('at 100 TB the index side's signatures come from storage
-    instead of recompute') made concrete. Each subsequent crawl batch
-    is deduped against this table via
-    ``minhash_dedup_pairs_prebuilt`` without ever re-sketching the
-    index; per-batch index cost drops from re-running the whole
-    shingle→md5→min pipeline to a columnar signature scan. New
-    batches are appended to the index the same way (mode is the
-    caller's choice at the write site: this build is the initial/full
-    refresh).
-
-    A ``_params.json`` sidecar (k, bands, rows_per_band, band_buckets)
-    is written beside the parquet — underscore-prefixed files are
-    invisible to parquet discovery (same trick as the IVF
-    ``_codebook.json``) — so the query path can validate/derive its
-    sketch parameters instead of trusting the caller to repeat them;
-    a silent mismatch would corrupt every Jaccard estimate (sig
-    lengths vs num_hashes divisor).
-
-    ``band_buckets``: the band-bucketed storage layout — the minhash
-    analog of the IVF cid-partitioned index. Signatures are written
-    PARTITIONED BY (band_id, bk) where bk = crc32(band_key) mod
-    band_buckets, and the prebuilt query path prunes its index read
-    to the partitions the batch's own band keys hash into. For a
-    LARGE batch every bucket is hit and pruning is a no-op (the flat
-    columnar scan was already the cheap path); the win is the
-    small-batch / point-lookup serving shape, where a handful of
-    band keys touch ≤ bands × |batch keys| of the bands ×
-    band_buckets partitions. The bucket key is storage-internal:
-    results are bit-identical to the unpartitioned layout (asserted
-    in tests).
-
-    When to bucket (measured r6): the pruned read wins only once the
-    FLAT index scan dominates the per-batch fixed cost (the batch's
-    own sketch + one driver-side key collect, ~2 s on this host). At
-    500k docs (2M banded rows, ~50 MB) a 1-doc point lookup measured
-    2.3 s flat vs 2.9 s bucketed — below multi-GB indexes, prefer the
-    flat layout; the pruning mechanism itself is plan-gated
-    (PartitionFilters carries the per-band (band_id, bk) pairs) and
-    the layout writes one file per partition dir per ingest, so the
-    crossover at real scale is a storage-bytes argument, not a
-    tiny-file gamble.
-
-    ``band_buckets="auto"`` (r7) closes the layout choice for the
-    user: one column-pruned count estimates the banded table's bytes
-    (``EST_BANDED_ROW_BYTES`` per row, anchored by bench_index) and
-    picks the bucketed layout (``DEFAULT_BAND_BUCKETS``) once the
-    estimate crosses ``BUCKET_MIN_INDEX_BYTES`` — the measured
-    LAYOUT crossover (BENCH_INDEX: flat still wins at 578 MB, pruned
-    wins by 2.3 GB), deliberately higher than the read side's
-    ``PRUNE_MIN_INDEX_BYTES`` which only decides whether an
-    already-bucketed index is worth pruning (r7 ADVICE: reusing the
-    read threshold here picked the measured-slower serving layout for
-    64 MB-1 GiB indexes). Small corpora keep the flat layout the
-    measurement says serves them faster. The resolved value lands in
-    the sidecar, so reads and appends never see the sentinel."""
-    if isinstance(band_buckets, str):
-        if band_buckets != "auto":
-            raise ValueError(
-                f"band_buckets must be an int, None, or 'auto'; got "
-                f"{band_buckets!r} (a typo here would otherwise cast to a "
-                "NULL bucket key and write every row into one "
-                "__HIVE_DEFAULT_PARTITION__ dir)"
-            )
-        est_bytes = docs.count() * bands * EST_BANDED_ROW_BYTES
-        band_buckets = (
-            DEFAULT_BAND_BUCKETS
-            if est_bytes >= BUCKET_MIN_INDEX_BYTES
-            else None
-        )
-    banded = _banded(
-        minhash_signatures(
-            doc_shingles(docs, k), bands * rows_per_band
-        ),
-        bands,
-        rows_per_band,
-    )
-    if band_buckets is not None:
-        # Repartition BY THE PARTITION KEY before the partitioned
-        # write: without it every shuffle task writes into every
-        # (band_id, bk) directory — up to tasks x bands x buckets tiny
-        # files, and the point-lookup read then pays per-file open
-        # cost instead of a pruned columnar scan (measured 5x SLOWER
-        # than the flat layout at the x30 corpus before this fix).
-        # One exchange at ingest buys one file per partition dir.
-        banded.withColumn(
-            "bk",
-            F.pmod(F.crc32(F.col("band_key")), F.lit(band_buckets)).cast(
-                "int"
-            ),
-        ).repartition("band_id", "bk").write.mode("overwrite").partitionBy(
-            "band_id", "bk"
-        ).parquet(path)
-    else:
-        banded.write.mode("overwrite").parquet(path)
-    from datafusion_dist_spark.sources.sidecar import write_json_sidecar
-
-    write_json_sidecar(
-        docs.sparkSession,
-        path,
-        "_params.json",
-        {
-            "k": k,
-            "bands": bands,
-            "rows_per_band": rows_per_band,
-            "band_buckets": band_buckets,
-        },
-    )
-    # Band-cardinality compaction (VERDICT r10 task 5): per-band HLL
-    # registers + posting counts beside the posting lists, read back
-    # from the JUST-WRITTEN columnar files (a 2-column pruned scan —
-    # cheaper than re-running the shingle pipeline) so bucket_cap can
-    # be selected from measured cardinality at serving time
-    # (select_bucket_cap). Bounded: bands x 2^p integer rows.
-    from datafusion_dist_spark.operators import sketch as _sk
-
-    regs = band_register_table(docs.sparkSession.read.parquet(path))
-    write_json_sidecar(
-        docs.sparkSession,
-        path,
-        BAND_STATS_SIDECAR,
-        {"p": _sk.HLL_P, "registers": _band_stats_rows(regs)},
-    )
-    _INDEX_SCALE_CACHE.pop(path, None)
-    return path
-
-
-def minhash_index_append(
-    spark,
-    batch: DataFrame,
-    path: str,
-) -> str:
-    """Continuous-crawl ingest: sketch ONLY the new batch and APPEND
-    its banded signatures to an existing ``minhash_index_build``
-    index — the per-batch write half of the streaming dedup loop
-    (dedupe the drop against the index, then fold the drop in so the
-    NEXT drop dedupes against it too). Sketch parameters always come
-    from the index's ``_params.json`` sidecar: an append with
-    mismatched k/bands/rows would silently corrupt every later
-    Jaccard estimate, so there is deliberately no way to pass them.
-    The partition layout (flat or band-bucketed) follows the build's.
-
-    At 100 TB this is one columnar append of (doc_id, band_id,
-    band_key, sig) per crawl drop — the index is never rewritten or
-    re-sketched; cost is the batch's own shingle→md5→min pipeline
-    plus the write."""
-    from datafusion_dist_spark.sources.sidecar import read_json_sidecar
-
-    stored = read_json_sidecar(spark, path, "_params.json")
-    if stored is None:
-        raise ValueError(
-            f"minhash index at {path} has no _params.json sidecar; "
-            "appends must reuse the build-time sketch params — rebuild "
-            "the index (or restore the sidecar) before appending"
-        )
-    k = int(stored["k"])
-    bands = int(stored["bands"])
-    rows_per_band = int(stored["rows_per_band"])
-    band_buckets = stored.get("band_buckets")
-    banded = _banded(
-        minhash_signatures(
-            doc_shingles(batch, k), bands * rows_per_band
-        ),
-        bands,
-        rows_per_band,
-    )
-    if band_buckets:
-        # Same one-file-per-partition-dir discipline as the build
-        # (see minhash_index_build): without the repartition every
-        # append multiplies the tiny-file count by the task count.
-        banded.withColumn(
-            "bk",
-            F.pmod(F.crc32(F.col("band_key")), F.lit(band_buckets)).cast(
-                "int"
-            ),
-        ).repartition("band_id", "bk").write.mode("append").partitionBy(
-            "band_id", "bk"
-        ).parquet(path)
-    else:
-        banded.write.mode("append").parquet(path)
-    # Fold the batch's band registers into the stats sidecar: max_rho
-    # max-merges, n_post sum-merges, so the stored compaction equals a
-    # full rebuild's (property-tested) without rescanning the index.
-    # The batch-sized register pass recomputes only the BATCH's banded
-    # frame. An index predating the sidecar stays stats-less (merging
-    # batch-only registers over a missing base would undercount;
-    # select_bucket_cap names the rebuild remedy).
-    stored_stats = read_json_sidecar(spark, path, BAND_STATS_SIDECAR)
-    if stored_stats is not None:
-        from datafusion_dist_spark.sources.sidecar import write_json_sidecar
-
-        batch_rows = _band_stats_rows(band_register_table(banded))
-        write_json_sidecar(
-            spark,
-            path,
-            BAND_STATS_SIDECAR,
-            {
-                "p": stored_stats["p"],
-                "registers": _merge_band_stats(
-                    stored_stats["registers"], batch_rows
-                ),
-            },
-        )
-    _INDEX_SCALE_CACHE.pop(path, None)
-    return path
-
-
-# -- band-cardinality sidecar (VERDICT r10 task 5) --------------------------
+# -- band-cardinality stats ------------------------------------------------
 #
 # The hot-bucket cap's one tunable was static (DEFAULT_BUCKET_CAP).
 # What the right cap IS depends on a measurable corpus property: how
-# many postings share a band bucket. The index build now compacts a
-# per-band HLL register table (registers beside the posting lists —
-# bands x 2^p integers, constant regardless of corpus size) into the
-# `_band_stats.json` sidecar, so "how many distinct buckets / postings
-# per bucket does band b hold" is answered at ingest and the cap can
-# be SELECTED from measured cardinality: headroom x the measured mean
-# bucket size, floored at the static default (normal corpora — mean
-# ~1 — keep cap 16 and the guard bites only pathological buckets),
-# ceilinged at MAX_BUCKET_CAP (per-bucket pair work stays <= cap^2
-# regardless of what the corpus claims). max_rho max-merges and
-# n_post sum-merges, so appends fold their batch's registers into the
-# sidecar without rescanning the index.
-BAND_STATS_SIDECAR = "_band_stats.json"
+# many postings share a band bucket. A per-band HLL register table
+# (bands x 2^p integers, constant regardless of corpus size) answers
+# "how many distinct buckets / postings per bucket does band b hold",
+# so the cap can be SELECTED from measured cardinality: headroom x the
+# measured mean bucket size, floored at the static default (normal
+# corpora — mean ~1 — keep cap 16 and the guard bites only
+# pathological buckets), ceilinged at MAX_BUCKET_CAP (per-bucket pair
+# work stays <= cap^2 regardless of what the corpus claims).
 MAX_BUCKET_CAP = 256
 BUCKET_CAP_HEADROOM = 4
 
@@ -724,223 +444,6 @@ def band_stats_from_registers(regs: DataFrame) -> DataFrame:
         mean.alias("mean_bucket"),
         cap.cast("int").alias("bucket_cap"),
     )
-
-
-def _band_stats_rows(regs: DataFrame) -> list[list[int]]:
-    """Collect a register table into the sidecar's JSON shape —
-    sorted [band_id, register, max_rho, n_post] rows (bands x 2^p
-    max, a bounded driver-side list by construction)."""
-    return sorted(
-        [int(r["band_id"]), int(r["register"]), int(r["max_rho"]),
-         int(r["n_post"])]
-        for r in regs.collect()
-    )
-
-
-def _merge_band_stats(
-    old: list[list[int]], new: list[list[int]]
-) -> list[list[int]]:
-    """Fold appended-batch registers into stored ones: max_rho
-    MAX-merges (HLL register property), n_post SUM-merges — the merged
-    sidecar equals a full rebuild's (property-tested)."""
-    acc: dict[tuple[int, int], list[int]] = {
-        (b, reg): [rho, n] for b, reg, rho, n in old
-    }
-    for b, reg, rho, n in new:
-        cur = acc.get((b, reg))
-        if cur is None:
-            acc[(b, reg)] = [rho, n]
-        else:
-            cur[0] = max(cur[0], rho)
-            cur[1] += n
-    return sorted([b, reg, rho, n] for (b, reg), (rho, n) in acc.items())
-
-
-def _stats_df_from_rows(spark, rows: list[list[int]]) -> DataFrame:
-    return spark.createDataFrame(
-        [tuple(r) for r in rows],
-        "band_id int, register int, max_rho int, n_post bigint",
-    )
-
-
-def select_bucket_cap(spark, index_path: str) -> int:
-    """The measured-cardinality bucket cap for a corpus whose minhash
-    index carries a ``_band_stats.json`` sidecar: the MAX of the
-    per-band selections (the cap must cover the hottest band). Answers
-    at ingest-time cost zero — the registers were compacted when the
-    index was built/appended; this reads bands x 2^p integers and runs
-    the estimator over them. Raises on a stats-less index (built
-    before the sidecar existed): silently falling back to the static
-    default would defeat the caller's explicit ask for the measured
-    selection."""
-    from datafusion_dist_spark.sources.sidecar import read_json_sidecar
-
-    stored = read_json_sidecar(spark, index_path, BAND_STATS_SIDECAR)
-    if stored is None:
-        raise ValueError(
-            f"minhash index at {index_path} has no {BAND_STATS_SIDECAR} "
-            "sidecar — rebuild (or append once) with the current build "
-            "to compact band registers, or pass an explicit bucket_cap"
-        )
-    caps = [
-        r["bucket_cap"]
-        for r in band_stats_from_registers(
-            _stats_df_from_rows(spark, stored["registers"])
-        ).collect()
-    ]
-    return int(max(caps)) if caps else DEFAULT_BUCKET_CAP
-
-
-def minhash_dedup_pairs_prebuilt(
-    spark,
-    index_path: str,
-    batch: DataFrame,
-    split_id: int,
-    k: int | None = None,
-    bands: int | None = None,
-    rows_per_band: int | None = None,
-    threshold: float = 0.5,
-    prune: bool | None = None,
-) -> DataFrame:
-    """Query-serving half over a ``minhash_index_build`` index: sketch
-    ONLY the incoming batch, read the index's banded signatures from
-    storage, and run the identical cross-set banded join as
-    ``minhash_dedup_pairs(index ∪ batch, split_id=...)`` — results are
-    bit-identical (asserted in tests); index ids must be < split_id
-    and batch ids >= split_id, exactly the incremental contract. The
-    continuous-crawl serving shape: per batch, index cost is a
-    columnar scan of stored signatures (no re-shingling), batch cost
-    is the batch's own sketch, and the join shape — one banded
-    equi-join, never index×index or batch×batch — is unchanged.
-
-    Sketch parameters default to the index's ``_params.json`` sidecar
-    (written by ``minhash_index_build``); explicitly passed values are
-    validated against it — a k/bands/rows mismatch raises instead of
-    silently producing wrong Jaccard estimates. A MISSING sidecar is
-    an error unless the caller passes ALL of k/bands/rows_per_band
-    explicitly: silently assuming defaults would re-open exactly the
-    corruption the sidecar exists to prevent (an index built with
-    non-default params whose sidecar was lost would be scored with
-    mismatched signature lengths).
-
-    ``prune``: ``True`` forces the partition-pruned read (raises on a
-    flat-layout index, which has no partition dirs to prune — a
-    silent flat scan would defeat the caller's explicit intent),
-    ``False`` the flat scan of the bucketed files, ``None`` (default)
-    AUTO-SELECTS from the index's bytes / file count (one filesystem
-    RPC, no Spark job): pruning pays a fixed driver-side key-collect
-    job, so small indexes are served faster by the flat scan
-    (measured: 2.3 s flat vs 2.9 s pruned at a 50 MB index) while
-    large/many-file indexes need the pruned read (thresholds
-    ``PRUNE_MIN_INDEX_BYTES`` / ``PRUNE_MIN_INDEX_FILES``). The
-    (bytes, files) probe is memoized per path behind the root
-    ``_SUCCESS`` marker's freshness token, so an append from ANY
-    process flips the choice on the next read. Results are
-    bit-identical either way — the choice only moves storage reads."""
-    from datafusion_dist_spark.sources.sidecar import read_json_sidecar
-
-    stored = read_json_sidecar(spark, index_path, "_params.json")
-    if stored is None:
-        if k is None or bands is None or rows_per_band is None:
-            raise ValueError(
-                f"minhash index at {index_path} has no _params.json "
-                "sidecar; pass k, bands AND rows_per_band explicitly "
-                "(they must match the build) — assuming defaults would "
-                "silently corrupt Jaccard estimates if the index was "
-                "built with other params"
-            )
-        stored = {}
-    for name, passed in (("k", k), ("bands", bands), ("rows_per_band", rows_per_band)):
-        if passed is not None and name in stored and stored[name] != passed:
-            raise ValueError(
-                f"minhash index at {index_path} was built with "
-                f"{name}={stored[name]}, got {name}={passed}; a mismatch "
-                "silently corrupts Jaccard estimates"
-            )
-    k = k if k is not None else stored.get("k", 3)
-    bands = bands if bands is not None else stored.get("bands", 4)
-    rows_per_band = (
-        rows_per_band if rows_per_band is not None else stored.get("rows_per_band", 4)
-    )
-    num_hashes = bands * rows_per_band
-    banded_batch = _banded(
-        minhash_signatures(doc_shingles(batch, k), num_hashes),
-        bands,
-        rows_per_band,
-    )
-    index = spark.read.parquet(index_path)
-    band_buckets = stored.get("band_buckets")
-    if prune and not band_buckets:
-        # A flat-layout index has no (band_id, bk) partition dirs to
-        # prune; silently serving the flat scan would let a caller
-        # believe they forced the pruned read (r7 ADVICE).
-        raise ValueError(
-            f"prune=True, but the minhash index at {index_path} was "
-            "built with band_buckets=None (flat layout) — there are no "
-            "partition directories to prune. Rebuild with "
-            "band_buckets='auto' (or an int), or drop prune=True"
-        )
-    if band_buckets and prune is None:
-        from datafusion_dist_spark.sources.sidecar import (
-            dir_summary,
-            success_marker_token,
-        )
-
-        token = success_marker_token(spark, index_path)
-        hit = _INDEX_SCALE_CACHE.get(index_path)
-        if hit is not None and token is not None and hit[0] == token:
-            nbytes, nfiles = hit[1]
-        else:
-            nbytes, nfiles = dir_summary(spark, index_path)
-            if token is not None:
-                _INDEX_SCALE_CACHE[index_path] = (token, (nbytes, nfiles))
-            else:
-                _INDEX_SCALE_CACHE.pop(index_path, None)
-        prune = (
-            nbytes >= PRUNE_MIN_INDEX_BYTES or nfiles >= PRUNE_MIN_INDEX_FILES
-        )
-    if band_buckets and prune:
-        # Band-bucketed layout: prune the index read to the partitions
-        # the batch's band keys hash into. The collect is driver-sized
-        # by the batch contract (≤ bands × |batch| keys — same
-        # discipline as the IVF probe ranking); filtering on the
-        # PARTITION columns (band_id, bk) before any cast keeps the
-        # scan's PartitionFilters populated (plan-gated). For a batch
-        # whose keys cover every bucket this degrades gracefully to
-        # the full columnar scan.
-        keys = (
-            banded_batch.select(
-                "band_id",
-                F.pmod(F.crc32(F.col("band_key")), F.lit(band_buckets))
-                .cast("int")
-                .alias("bk"),
-            )
-            .distinct()
-            .collect()
-        )
-        if not keys:
-            index = index.filter(F.lit(False))
-        else:
-            # Per-band OR of bk sets, NOT band_id.isin x bk.isin: the
-            # cross-product form prunes almost nothing for multi-doc
-            # batches (a 10-doc batch touches ~10 distinct bk per
-            # band, and 4 bands x their UNION covers nearly every
-            # partition — measured reading 120/128 partitions where
-            # the pair form reads 40). A disjunction of conjunctions
-            # over partition columns still lands in PartitionFilters.
-            by_band: dict[int, set] = {}
-            for r in keys:
-                by_band.setdefault(int(r.band_id), set()).add(int(r.bk))
-            pred = None
-            for band_id in sorted(by_band):
-                clause = (F.col("band_id") == band_id) & F.col("bk").isin(
-                    sorted(by_band[band_id])
-                )
-                pred = clause if pred is None else (pred | clause)
-            index = index.filter(pred)
-    a = index.alias("a").hint("shuffle_hash")
-    b = banded_batch.alias("b")
-    return _band_pair_estimates(a, b, num_hashes, threshold, split_id)
 
 
 # -- SimHash --------------------------------------------------------------

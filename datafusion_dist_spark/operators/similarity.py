@@ -1858,8 +1858,7 @@ def ivf_index_build(
     # dir (tasks x K tiny files — 2557 files for an 80-list index at
     # x10, measured), and every later partition-pruned query pays
     # per-file open cost. One exchange at ingest buys one file per
-    # inverted list — the same discipline as the band-bucketed
-    # minhash index.
+    # inverted list.
     assigned.repartition("cid").write.mode("overwrite").partitionBy(
         "cid"
     ).parquet(path)

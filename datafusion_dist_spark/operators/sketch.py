@@ -172,9 +172,9 @@ def hll_registers(
     distinct shuffle of the key space. ``with_counts`` adds ``n_post``
     (ROW count per register — duplicates included, unlike max_rho
     which only sees distincts) from the same single aggregate; the
-    (rows, distinct) ratio is what the minhash index's band-stats
-    sidecar compacts at ingest (max_rho max-merges, n_post
-    sum-merges, so appended batches fold in without a rescan)."""
+    (rows, distinct) ratio is the mean band-bucket size that
+    ``dedup.band_stats_from_registers`` turns into a measured
+    bucket cap."""
     m = 1 << p
     rho_max = hll_rho_max(p)
     h = hash_int60(F.col(key).cast("string"))
@@ -337,8 +337,8 @@ def kmv_sketch(
     key-space shuffle an exact COUNT(DISTINCT) pays — then a
     per-group bounded selection; after that, every pairwise question
     over N groups costs k-row merges forever (the same
-    pay-at-ingest-then-constant contract as the minhash/IVF prebuilt
-    indexes). Groups with fewer than k distinct keys keep ALL their
+    pay-at-ingest-then-constant contract as the IVF prebuilt
+    index). Groups with fewer than k distinct keys keep ALL their
     hashes (rn never reaches k) and are EXACT (theta = 1). NULL is
     not a key — same contract as the HLL/CMS builds. Hashes are
     cross-engine md5 windows, so a DuckDB oracle reproduces every

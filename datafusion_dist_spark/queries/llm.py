@@ -55,22 +55,21 @@ BANDS = 4
 ROWS_PER_BAND = 4
 
 
-_QVEC_CACHE: dict[str, list[float]] = {}
-
-
 def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
-    """The vec_id=0 query vector — a 64-float query *parameter*, cached
-    per scale dir so repeated ANN queries don't re-run the one-row
-    lookup job."""
-    if sf_dir not in _QVEC_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _QVEC_CACHE[sf_dir] = list(
-            emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-        )
-    return _QVEC_CACHE[sf_dir]
-
-
-_DUP_OFFSET_CACHE: dict[tuple[str, str, str, int], int] = {}
+    """The vec_id=0 query vector — a 64-float query *parameter*, held
+    per scale dir in the session cache so repeated ANN queries don't
+    re-run the one-row lookup job."""
+    return session_cache(
+        spark,
+        "query_vec",
+        (sf_dir,),
+        lambda: list(
+            load_table(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") == 0)
+            .select("embedding")
+            .head()[0]
+        ),
+    )
 
 
 def _planted_id_offset(
@@ -82,15 +81,14 @@ def _planted_id_offset(
 ) -> int:
     """Smallest multiple of ``granularity`` strictly above
     ``max(id_col)`` — the collision-free base for planted-replica ids,
-    cached per (scale dir, table, id col, granularity) so repeated
-    entries don't re-run the one-row aggregate job (granularity is part
-    of the key: a cached multiple of 100000 is NOT a valid offset for a
-    caller asking in units of 1000000). Both sides read the same
-    parquet, so Spark and the DuckDB oracle derive the identical
-    integer."""
-    key = (sf_dir, table, id_col, granularity)
-    off = _DUP_OFFSET_CACHE.get(key)
-    if off is None:
+    held in the session cache per (table, id col) name and (scale dir,
+    granularity) key so repeated entries don't re-run the one-row
+    aggregate job (granularity is part of the key: a cached multiple
+    of 100000 is NOT a valid offset for a caller asking in units of
+    1000000). Both sides read the same parquet, so Spark and the
+    DuckDB oracle derive the identical integer."""
+
+    def build() -> int:
         mx = (
             load_table(spark, sf_dir, table).agg(F.max(id_col)).head()[0]
         )
@@ -99,9 +97,11 @@ def _planted_id_offset(
                 f"{table}.{id_col} at {sf_dir} is empty/all-NULL: cannot "
                 "derive a planted-id offset for the synthetic replicas"
             )
-        off = (int(mx) // granularity + 1) * granularity
-        _DUP_OFFSET_CACHE[key] = off
-    return off
+        return (int(mx) // granularity + 1) * granularity
+
+    return session_cache(
+        spark, f"planted_id_offset:{table}.{id_col}", (sf_dir, granularity), build
+    )
 
 
 def _dup_offset(spark: SparkSession, sf_dir: str) -> int:

@@ -1,8 +1,8 @@
 """JSON sidecar I/O beside parquet index directories.
 
-Index builders (``minhash_index_build``, ``ivf_index_build``) ship a
-small model/params artifact next to the partition directories as an
-underscore-prefixed file (invisible to parquet discovery). The parquet
+The IVF index build (``ivf_index_build``) ships its codebook next to
+the partition directories as an underscore-prefixed file
+(``_codebook.json``, invisible to parquet discovery). The parquet
 write itself accepts any Hadoop URI (s3a://, hdfs://, file:/, bare
 local paths), so the sidecar must too — a plain ``open()`` crashes on
 every non-local URI (flagged in round-5 review). These helpers go
@@ -22,38 +22,6 @@ def _fs_and_path(spark, dir_path: str, name: str):
     parent = jvm.org.apache.hadoop.fs.Path(dir_path)
     fs = parent.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, jvm.org.apache.hadoop.fs.Path(parent, name)
-
-
-def dir_summary(spark, dir_path: str) -> tuple[int, int]:
-    """(total bytes, file count) under ``dir_path`` via the Hadoop FS
-    content summary — one namenode RPC, no Spark job. The prebuilt
-    index readers use this to auto-select pruned vs flat scans: both
-    signals are already known to the filesystem, so the caller never
-    has to guess the index's scale."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(dir_path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    s = fs.getContentSummary(p)
-    return int(s.getLength()), int(s.getFileCount())
-
-
-def success_marker_token(spark, dir_path: str) -> tuple[int, int] | None:
-    """One-stat freshness token for a Spark-written directory: the
-    (mtime_ms, length) of the root ``_SUCCESS`` marker, which Spark's
-    commit protocol rewrites on EVERY successful write job into the
-    directory — builds and appends alike, from any process. None when
-    the marker is absent (committer configured with
-    ``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``, or a
-    non-Spark writer): callers must treat None as "cannot prove
-    freshness" and skip caching. The index scale cache keys on this so
-    a cross-process append flips the pruned-vs-flat auto-select
-    without a restart (stat is one RPC vs the recursive listing of
-    ``dir_summary``)."""
-    fs, p = _fs_and_path(spark, dir_path, "_SUCCESS")
-    if not fs.exists(p):
-        return None
-    st = fs.getFileStatus(p)
-    return int(st.getModificationTime()), int(st.getLen())
 
 
 def write_json_sidecar(spark, dir_path: str, name: str, obj: Any) -> None:

@@ -923,6 +923,34 @@ def test_ngram_truth_cache_matches_direct_derivation(spark):
     assert again is shared
 
 
+def test_query_parameter_memos_hit_without_a_job(spark):
+    """The planted-id offset and the one-row query vector live in the
+    session cache: a repeat call is a counted hit and starts no Spark
+    job (its build — table load and one-row action — runs only on the
+    miss)."""
+    from datafusion_dist_spark.operators.common import forget, session_cache_hits
+    from datafusion_dist_spark.queries import llm
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test-query-parameter-memos"
+    forget(spark, "planted_id_offset:documents.doc_id", (SF_DIR, 100000))
+    forget(spark, "query_vec", (SF_DIR,))
+    sc.setJobGroup(group, "query-parameter memos")
+    try:
+        off, qvec = llm._dup_offset(spark, SF_DIR), llm._query_vec(spark, SF_DIR)
+        cold_jobs = set(tracker.getJobIdsForGroup(group))
+        assert cold_jobs, "the cold builds must run their lookup jobs"
+        h0 = session_cache_hits()
+        assert llm._dup_offset(spark, SF_DIR) == off
+        assert session_cache_hits() == h0 + 1
+        assert llm._query_vec(spark, SF_DIR) == qvec
+        assert session_cache_hits() == h0 + 2
+        assert set(tracker.getJobIdsForGroup(group)) == cold_jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_embedding_health_report_degenerate_rows_match_oracle(spark, tmp_path):
     """The health report must stay engine-identical exactly on the
     unhealthy inputs it exists to detect: a NaN component makes the
@@ -1060,166 +1088,24 @@ def test_ivf_prebuilt_empty_corpus_and_empty_queries(spark, tmp_path):
     assert out2.collect() == []
 
 
-def test_minhash_prebuilt_matches_union_exactly(spark, tmp_path):
-    """minhash_index_build + minhash_dedup_pairs_prebuilt must return
-    the incremental union form's pairs bit for bit — the index just
-    moves the corpus sketch to ingest time (same shingles, signatures,
-    banding, estimate, and cross-set predicate)."""
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    index = docs.filter(F.col("doc_id") < 40)
-    planted = index.filter(F.col("doc_id") % 6 == 0).select(
-        (F.col("doc_id") + 300000).alias("doc_id"), "text"
-    )
-    batch = docs.filter(F.col("doc_id") >= 40).unionByName(planted)
-    union_pairs = dedup.minhash_dedup_pairs(
-        index.unionByName(batch), threshold=0.5, split_id=40
-    ).collect()
-    path = str(tmp_path / "mh-index")
-    dedup.minhash_index_build(index, path)
-    pre_pairs = dedup.minhash_dedup_pairs_prebuilt(
-        spark, path, batch, split_id=40, threshold=0.5
-    ).collect()
-    assert sorted(map(tuple, pre_pairs)) == sorted(map(tuple, union_pairs))
-    assert pre_pairs, "no pairs found"
-    flagged = {r.b_id for r in pre_pairs}
-    for r in planted.collect():
-        assert r.doc_id in flagged, f"planted copy {r.doc_id} not flagged"
-
-
-def test_minhash_index_params_sidecar(spark, tmp_path):
-    """The index's _params.json sidecar is the source of truth for
-    sketch parameters: the prebuilt query path derives k/bands/rows
-    from it when the caller passes none (so non-default indexes keep
-    working without the caller repeating the numbers), and REJECTS a
-    mismatching explicit value — a silent k/bands mismatch corrupts
-    every Jaccard estimate (sig length vs num_hashes divisor)."""
-    import pytest as _pytest
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    index = docs.filter(F.col("doc_id") < 30)
-    batch = docs.filter(F.col("doc_id") < 30).select(
-        (F.col("doc_id") + 400000).alias("doc_id"), "text"
-    )
-    path = str(tmp_path / "mh-params")
-    dedup.minhash_index_build(index, path, k=4, bands=2, rows_per_band=8)
-    # Defaults derive from the sidecar → identical to the union form
-    # run with the build-time parameters.
-    derived = dedup.minhash_dedup_pairs_prebuilt(
-        spark, path, batch, split_id=400000, threshold=0.5
-    ).collect()
-    union = dedup.minhash_dedup_pairs(
-        index.unionByName(batch),
-        k=4,
-        bands=2,
-        rows_per_band=8,
-        threshold=0.5,
-        split_id=400000,
-    ).collect()
-    assert sorted(map(tuple, derived)) == sorted(map(tuple, union))
-    assert derived, "planted exact copies must pair"
-    # An explicit mismatch raises instead of silently mis-estimating.
-    with _pytest.raises(ValueError, match="built with"):
-        dedup.minhash_dedup_pairs_prebuilt(
-            spark, path, batch, split_id=400000, k=3
-        )
-    with _pytest.raises(ValueError, match="bands"):
-        dedup.minhash_dedup_pairs_prebuilt(
-            spark, path, batch, split_id=400000, bands=4
-        )
-    # r6: a LOST sidecar is an error unless the caller states ALL
-    # sketch params — the old silent k=3/bands=4/rows=4 fallback
-    # re-opened exactly the mismatch corruption the sidecar prevents.
-    import os as _os
-
-    _os.remove(_os.path.join(path, "_params.json"))
-    with _pytest.raises(ValueError, match="no _params.json"):
-        dedup.minhash_dedup_pairs_prebuilt(
-            spark, path, batch, split_id=400000, threshold=0.5
-        )
-    explicit = dedup.minhash_dedup_pairs_prebuilt(
-        spark, path, batch, split_id=400000, threshold=0.5,
-        k=4, bands=2, rows_per_band=8,
-    ).collect()
-    assert sorted(map(tuple, explicit)) == sorted(map(tuple, union))
-
-
-def test_minhash_index_append_matches_inline(spark, tmp_path):
-    """minhash_index_append folds a crawl drop into an existing index
-    so the NEXT drop pairs against it: after appending drop1, deduping
-    drop2 via the prebuilt path must equal the inline union form over
-    (index ∪ drop1 ∪ drop2) bit for bit — including cross-drop pairs
-    (drop2 repeats drop1's texts). Appends always reuse the sidecar's
-    sketch params; a lost sidecar refuses the append."""
-    import pytest as _pytest
-
-    split = 1_000_000
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    index = docs.filter(F.col("doc_id") < 60)
-    src = docs.filter(F.col("doc_id") % 10 == 0)
-    drops = [
-        src.select((F.col("doc_id") + split * (i + 1)).alias("doc_id"), "text")
-        for i in range(2)
-    ]
-    for buckets in (None, 4):
-        path = str(tmp_path / f"mh-append-{buckets}")
-        dedup.minhash_index_build(index, path, band_buckets=buckets)
-        dedup.minhash_index_append(spark, drops[0], path)
-        got = dedup.minhash_dedup_pairs_prebuilt(
-            spark, path, drops[1], split_id=2 * split, threshold=0.5
-        ).collect()
-        want = dedup.minhash_dedup_pairs(
-            index.unionByName(drops[0]).unionByName(drops[1]),
-            threshold=0.5,
-            split_id=2 * split,
-        ).collect()
-        assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-        # Cross-drop pairs prove the append is live: every drop1 doc is
-        # an exact twin of its drop2 counterpart.
-        cross = {(r.a_id, r.b_id) for r in got if r.a_id >= split}
-        assert len(cross) >= src.count()
-    import os as _os
-
-    _os.remove(_os.path.join(path, "_params.json"))
-    with _pytest.raises(ValueError, match="no _params.json"):
-        dedup.minhash_index_append(spark, drops[0], path)
-
-
-def test_band_stats_sidecar_merge_equals_rebuild(spark, tmp_path):
-    """The _band_stats.json compaction is a true distributed aggregate:
-    build over half the corpus + append the other half must leave the
-    SAME register rows as one full build (max_rho max-merges, n_post
-    sum-merges) — so a continuously-appended index answers bucket-
-    cardinality questions as if it had been rebuilt, without ever
-    rescanning itself."""
-    from datafusion_dist_spark.sources.sidecar import read_json_sidecar
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    half_a = docs.filter(F.col("doc_id") % 2 == 0)
-    half_b = docs.filter(F.col("doc_id") % 2 == 1)
-    inc_path = str(tmp_path / "mh-inc")
-    full_path = str(tmp_path / "mh-full")
-    dedup.minhash_index_build(half_a, inc_path)
-    dedup.minhash_index_append(spark, half_b, inc_path)
-    dedup.minhash_index_build(docs, full_path)
-    inc = read_json_sidecar(spark, inc_path, dedup.BAND_STATS_SIDECAR)
-    full = read_json_sidecar(spark, full_path, dedup.BAND_STATS_SIDECAR)
-    assert inc["registers"] == full["registers"]
-    assert inc["registers"], "sidecar must hold register rows"
-
-
-def test_measured_bucket_cap_selection(spark, tmp_path):
+def test_measured_bucket_cap_selection(spark):
     """bucket_cap selection from measured cardinality (VERDICT r10
     task 5): a planted template cluster (one text repeated 400x — the
     hot-bucket shape the cap guards) raises the selected cap above the
     static default (recall headroom where buckets are legitimately
     big) but never past MAX_BUCKET_CAP; a healthy corpus keeps the
-    default. The zero-cost sidecar read (select_bucket_cap), the
-    inline 'measured' selection, and the pair output under an explicit
-    equal cap all agree; a stats-less index refuses instead of
-    silently falling back."""
-    import os as _os
-
+    default. The inline 'measured' selection and the pair output
+    under an explicit equal cap agree; an unknown mode raises."""
     import pytest as _pytest
+
+    def measured_cap(frame):
+        banded = dedup._banded(
+            dedup.minhash_signatures(dedup.doc_shingles(frame), 16), 4, 4
+        )
+        stats = dedup.band_stats_from_registers(
+            dedup.band_register_table(banded)
+        ).collect()
+        return max(r["bucket_cap"] for r in stats)
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     base = docs.filter(F.col("doc_id") < 40)
@@ -1231,90 +1117,18 @@ def test_measured_bucket_cap_selection(spark, tmp_path):
         ).alias("text"),
     )
     corpus = base.unionByName(template)
-    path = str(tmp_path / "mh-hot")
-    dedup.minhash_index_build(corpus, path)
-    cap = dedup.select_bucket_cap(spark, path)
+    cap = measured_cap(corpus)
     assert dedup.DEFAULT_BUCKET_CAP < cap <= dedup.MAX_BUCKET_CAP, cap
-    # Inline measured selection over the same corpus agrees.
-    banded = dedup._banded(
-        dedup.minhash_signatures(dedup.doc_shingles(corpus), 16), 4, 4
-    )
-    stats = dedup.band_stats_from_registers(
-        dedup.band_register_table(banded)
-    ).collect()
-    assert cap == max(r["bucket_cap"] for r in stats)
     # bucket_cap='measured' == the explicit equal cap, bit for bit.
     got = dedup.minhash_dedup_pairs(corpus, bucket_cap="measured").collect()
     want = dedup.minhash_dedup_pairs(corpus, bucket_cap=cap).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert got, "template cluster must pair"
     # Healthy corpus: mean bucket ~1 -> the static default stands.
-    healthy_path = str(tmp_path / "mh-healthy")
-    dedup.minhash_index_build(docs.filter(F.col("doc_id") < 80), healthy_path)
-    assert dedup.select_bucket_cap(spark, healthy_path) == dedup.DEFAULT_BUCKET_CAP
-    # A stats-less index (predates the sidecar) refuses loudly.
-    _os.remove(_os.path.join(path, dedup.BAND_STATS_SIDECAR))
-    with _pytest.raises(ValueError, match="no _band_stats.json"):
-        dedup.select_bucket_cap(spark, path)
+    healthy = docs.filter(F.col("doc_id") < 80)
+    assert measured_cap(healthy) == dedup.DEFAULT_BUCKET_CAP
     with _pytest.raises(ValueError, match="bucket_cap"):
         dedup.minhash_dedup_pairs(corpus, bucket_cap="typo")
-
-
-def test_minhash_index_build_auto_layout(spark, tmp_path, monkeypatch):
-    """band_buckets='auto' picks the layout from the estimated banded
-    bytes: a small corpus writes FLAT (the measured faster serving
-    layout below the crossover), and once the estimate crosses
-    BUCKET_MIN_INDEX_BYTES — the LAYOUT crossover (~1 GiB), separate
-    from and higher than the read-side PRUNE_MIN_INDEX_BYTES per r7
-    ADVICE (threshold shrunk here rather than building a 1 GiB index
-    in a unit test) — the same call writes the bucketed layout with
-    the resolved bucket count in the sidecar — reads and appends
-    never see the 'auto' sentinel."""
-    import glob as _glob
-    import os as _os
-
-    from datafusion_dist_spark.sources.sidecar import read_json_sidecar
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    small = docs.filter(F.col("doc_id") < 60)
-
-    flat_path = str(tmp_path / "mh-auto-flat")
-    dedup.minhash_index_build(small, flat_path, band_buckets="auto")
-    assert not _glob.glob(_os.path.join(flat_path, "band_id=*"))
-    assert read_json_sidecar(spark, flat_path, "_params.json")[
-        "band_buckets"
-    ] is None
-
-    monkeypatch.setattr(dedup, "BUCKET_MIN_INDEX_BYTES", 1)
-    monkeypatch.setattr(dedup, "DEFAULT_BAND_BUCKETS", 4)
-    bucketed_path = str(tmp_path / "mh-auto-bucketed")
-    dedup.minhash_index_build(small, bucketed_path, band_buckets="auto")
-    assert _glob.glob(_os.path.join(bucketed_path, "band_id=*", "bk=*"))
-    assert (
-        read_json_sidecar(spark, bucketed_path, "_params.json")["band_buckets"]
-        == 4
-    )
-    # Both layouts serve identical pairs through the prebuilt path.
-    batch = small.filter(F.col("doc_id") % 4 == 0).select(
-        (F.col("doc_id") + 500000).alias("doc_id"), "text"
-    )
-    got_flat = sorted(
-        map(
-            tuple,
-            dedup.minhash_dedup_pairs_prebuilt(
-                spark, flat_path, batch, split_id=500000
-            ).collect(),
-        )
-    )
-    got_bucketed = sorted(
-        map(
-            tuple,
-            dedup.minhash_dedup_pairs_prebuilt(
-                spark, bucketed_path, batch, split_id=500000
-            ).collect(),
-        )
-    )
-    assert got_flat and got_flat == got_bucketed
 
 
 def test_global_row_number_determinism_fence(spark, tmp_path):
@@ -1402,141 +1216,6 @@ def test_quadratic_pin_guards_fence_oversized_input(spark):
     )
     #  - a hot-bucket/fat-cell cap closes the quadratic, pin allowed
     similarity.embedding_near_dup_pairs(big_vecs, nbits=4, bucket_cap=16)
-
-
-def test_minhash_prebuilt_prune_true_on_flat_layout_raises(spark, tmp_path):
-    """prune=True on a FLAT-layout index must raise, not silently
-    serve the flat scan: the caller explicitly forced the pruned read
-    and a flat index has no partition dirs to prune (r7 ADVICE — the
-    old `if band_buckets and prune` gate swallowed the request)."""
-    import pytest as _pytest
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    path = str(tmp_path / "mh-flat-noprune")
-    dedup.minhash_index_build(docs.filter(F.col("doc_id") < 30), path)
-    batch = docs.filter(F.col("doc_id") == 5).select(
-        (F.col("doc_id") + 500000).alias("doc_id"), "text"
-    )
-    with _pytest.raises(ValueError, match="flat layout"):
-        dedup.minhash_dedup_pairs_prebuilt(
-            spark, path, batch, split_id=500000, prune=True
-        )
-    # prune=False and auto stay valid on the flat layout.
-    assert (
-        dedup.minhash_dedup_pairs_prebuilt(
-            spark, path, batch, split_id=500000, prune=False
-        ).collect()
-        == dedup.minhash_dedup_pairs_prebuilt(
-            spark, path, batch, split_id=500000
-        ).collect()
-    )
-
-
-def test_index_scale_cache_cross_process_append(spark, tmp_path, monkeypatch):
-    """A cross-process append must flip the pruned-vs-flat auto-select
-    WITHOUT a restart (VERDICT r7 task 5): the (bytes, files) memo is
-    keyed on the root _SUCCESS marker's freshness token, which Spark's
-    commit protocol rewrites on every write job from any process. The
-    parent session reads once below the file threshold (flat scan),
-    a SUBPROCESS appends enough files to cross it, and the parent's
-    next read — same session, no manual invalidation — must serve the
-    partition-pruned plan."""
-    import os
-    import subprocess
-    import sys as _sys
-    import textwrap
-
-    from datafusion_dist_spark.operators import dedup as dd
-    from datafusion_dist_spark.plans import formatted_plan
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    path = str(tmp_path / "mh-xproc")
-    dd.minhash_index_build(
-        docs.filter(F.col("doc_id") < 40), path, band_buckets=4
-    )
-    batch = docs.filter(F.col("doc_id") == 5).select(
-        (F.col("doc_id") + 500000).alias("doc_id"), "text"
-    )
-
-    def prunes(df) -> bool:
-        return any(
-            "PartitionFilters" in ln and "bk#" in ln
-            for ln in formatted_plan(df).splitlines()
-        )
-
-    from datafusion_dist_spark.sources.sidecar import dir_summary
-
-    _, files_before = dir_summary(spark, path)
-    # Threshold between the pre- and post-append file counts so the
-    # append itself is what flips the decision.
-    monkeypatch.setattr(dd, "PRUNE_MIN_INDEX_FILES", files_before + 1)
-    dd._INDEX_SCALE_CACHE.pop(path, None)
-    before = dd.minhash_dedup_pairs_prebuilt(
-        spark, path, batch, split_id=500000
-    )
-    assert not prunes(before), "small index must serve the flat scan"
-    assert path in dd._INDEX_SCALE_CACHE, "probe result must be memoized"
-
-    script = textwrap.dedent(
-        f"""
-        import sys
-        sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
-        from pyspark.sql import SparkSession, functions as F
-        from datafusion_dist_spark.catalog import load_table
-        from datafusion_dist_spark.operators import dedup
-        spark = (SparkSession.builder.master("local[2]")
-                 .appName("xproc-append")
-                 .config("spark.ui.enabled", "false").getOrCreate())
-        docs = load_table(spark, {SF_DIR!r}, "documents").select("doc_id", "text")
-        drop = docs.filter(F.col("doc_id").between(40, 80)).select(
-            (F.col("doc_id") + 1000000).alias("doc_id"), "text")
-        dedup.minhash_index_append(spark, drop, {path!r})
-        spark.stop()
-        """
-    )
-    subprocess.run(
-        [_sys.executable, "-c", script], check=True, capture_output=True
-    )
-    _, files_after = dir_summary(spark, path)
-    assert files_after > files_before, "append must add files"
-
-    after = dd.minhash_dedup_pairs_prebuilt(
-        spark, path, batch, split_id=500000
-    )
-    assert prunes(after), (
-        "cross-process append did not flip the auto-select to the "
-        "pruned read — stale _INDEX_SCALE_CACHE entry"
-    )
-
-
-def test_minhash_bucketed_index_file_discipline(spark, tmp_path):
-    """The bucketed layout must write ONE file per (band_id, bk)
-    partition dir per ingest (repartition by the partition key before
-    partitionBy): without it every shuffle task writes into every dir
-    — tasks x bands x buckets tiny files, and the pruned point-lookup
-    read measured 5x SLOWER than the flat scan at x30 from per-file
-    open cost alone. An append adds at most one more file per dir."""
-    import glob as _glob
-    import os as _os
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    path = str(tmp_path / "mh-filecount")
-    dedup.minhash_index_build(
-        docs.filter(F.col("doc_id") < 80), path, band_buckets=4
-    )
-
-    def files_per_dir():
-        out = {}
-        for d in _glob.glob(_os.path.join(path, "band_id=*", "bk=*")):
-            out[d] = len(_glob.glob(_os.path.join(d, "*.parquet")))
-        return out
-
-    counts = files_per_dir()
-    assert counts, "no partition dirs written"
-    assert max(counts.values()) == 1, counts
-    batch = docs.filter(F.col("doc_id") >= 80).limit(40)
-    dedup.minhash_index_append(spark, batch, path)
-    assert max(files_per_dir().values()) <= 2, files_per_dir()
 
 
 def test_ivf_index_file_discipline(spark, tmp_path):
@@ -1829,56 +1508,6 @@ def test_semantic_head_cap_preserves_dup_of(spark):
         ).collect()
     }
     assert relaxed == unc
-
-
-def test_minhash_band_bucketed_index_bit_identical(spark, tmp_path):
-    """The band-bucketed index layout (PARTITIONED BY band_id, bk) is
-    storage-internal: the prebuilt query path over it must return
-    exactly the flat layout's pairs AND the inline union form's —
-    the bucket key only prunes reads, never changes results."""
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    index = docs.filter(F.col("doc_id") < 60)
-    batch = index.filter(F.col("doc_id") % 4 == 0).select(
-        (F.col("doc_id") + 500000).alias("doc_id"), "text"
-    )
-    flat = str(tmp_path / "mh-flat")
-    bucketed = str(tmp_path / "mh-bucketed")
-    dedup.minhash_index_build(index, flat)
-    dedup.minhash_index_build(index, bucketed, band_buckets=8)
-
-    def pairs(path, prune=None):
-        return sorted(
-            map(
-                tuple,
-                dedup.minhash_dedup_pairs_prebuilt(
-                    spark, path, batch, split_id=500000, threshold=0.5,
-                    prune=prune,
-                ).collect(),
-            )
-        )
-
-    p_flat, p_bucketed = pairs(flat), pairs(bucketed)
-    assert p_flat, "planted copies must pair"
-    assert p_bucketed == p_flat
-    # r7 auto-select: both FORCED read modes over the bucketed layout
-    # are bit-identical to the flat layout — the pruned-vs-flat choice
-    # only moves storage reads, never results.
-    assert pairs(bucketed, prune=True) == p_flat
-    assert pairs(bucketed, prune=False) == p_flat
-    inline = sorted(
-        map(
-            tuple,
-            dedup.minhash_dedup_pairs(
-                index.unionByName(batch), threshold=0.5, split_id=500000
-            ).collect(),
-        )
-    )
-    assert p_bucketed == inline
-    # Empty batch over the bucketed layout: no keys -> empty result.
-    empty = dedup.minhash_dedup_pairs_prebuilt(
-        spark, bucketed, batch.filter(F.lit(False)), split_id=500000
-    )
-    assert empty.collect() == []
 
 
 def test_global_row_number_exact_and_edges(spark):

@@ -631,97 +631,6 @@ def test_band_stats_aggregate_only_no_joins(spark):
     assert facts["partial_aggregate"], facts
 
 
-def test_minhash_bucketed_index_scan_is_partition_pruned(spark, tmp_path):
-    """The band-bucketed minhash index (PARTITIONED BY band_id, bk)
-    must serve a small batch with a PRUNED read: the parquet scan
-    carries PartitionFilters on band_id and bk (directory-level
-    pruning of unmatched buckets) — the minhash analog of the IVF
-    cid-pruned probe read.
-
-    The pruned read is AUTO-SELECTED from the index's scale (r7):
-    pruning pays a fixed driver-side key-collect job, so against a
-    SMALL index the flat scan wins and the auto path must take it
-    (no bk PartitionFilters); once the index's file count crosses
-    PRUNE_MIN_INDEX_FILES (here: a padded many-file index) the auto
-    path must flip to the pruned plan. ``prune=True/False`` overrides
-    both ways; results are bit-identical regardless (operators
-    tests)."""
-    from datafusion_dist_spark.operators import dedup as dd
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    path = str(tmp_path / "mh-bucketed")
-    dd.minhash_index_build(
-        docs.filter(F.col("doc_id") < 80), path, band_buckets=16
-    )
-    batch = docs.filter(F.col("doc_id") == 5).select(
-        (F.col("doc_id") + 500000).alias("doc_id"), "text"
-    )  # one doc -> 4 band keys -> <= 4 of the 64 (band_id, bk) dirs
-
-    def bk_partition_filters(df):
-        return [
-            ln
-            for ln in formatted_plan(df).splitlines()
-            if "PartitionFilters" in ln and "bk#" in ln
-        ]
-
-    # Small index (64 dirs, ~100 KB): auto takes the FLAT scan — no
-    # bk pruning predicate, no driver-side key collect.
-    auto_small = dd.minhash_dedup_pairs_prebuilt(
-        spark, path, batch, split_id=500000, threshold=0.5
-    )
-    assert not bk_partition_filters(auto_small), (
-        "auto-select pruned a small index where flat wins"
-    )
-
-    # Synthetic many-file index: pad the file count past the auto
-    # threshold with underscore-prefixed files (invisible to parquet
-    # discovery, counted by the FS summary — the signal is file count,
-    # not content). Auto must flip to the pruned read.
-    import pathlib as _pl
-
-    for i in range(dd.PRUNE_MIN_INDEX_FILES + 8):
-        (_pl.Path(path) / f"_pad-{i}").touch()
-    # The (bytes, files) probe is memoized per path behind the root
-    # _SUCCESS marker's freshness token. Hand-touched pad files do NOT
-    # go through a Spark write job, so the token is unchanged and the
-    # memo would serve the stale summary — explicit invalidation, as
-    # documented on the cache. (A real cross-process APPEND rewrites
-    # _SUCCESS and flips the choice without this — pinned by
-    # test_operators.py::test_index_scale_cache_cross_process_append.)
-    dd._INDEX_SCALE_CACHE.pop(path, None)
-    auto_big = dd.minhash_dedup_pairs_prebuilt(
-        spark, path, batch, split_id=500000, threshold=0.5
-    )
-    assert bk_partition_filters(auto_big), (
-        "auto-select did not prune a many-file index"
-    )
-
-    # Forced pruned read: the predicate-shape assertions below.
-    df = dd.minhash_dedup_pairs_prebuilt(
-        spark, path, batch, split_id=500000, threshold=0.5, prune=True
-    )
-    plan = formatted_plan(df)
-    pf_lines = [
-        ln
-        for ln in plan.splitlines()
-        if "PartitionFilters" in ln and "bk#" in ln
-    ]
-    assert pf_lines, plan[:2000]
-    import re
-
-    # r6: the predicate is a per-band OR of (band_id = b AND bk = k)
-    # conjunctions — PAIR pruning, not band_id.isin x bk.isin (the
-    # cross-product form pruned almost nothing for multi-doc batches:
-    # a 10-doc batch's band/bucket UNION covered 120 of 128 dirs where
-    # the pair form reads 40). One doc -> <= 4 pair clauses.
-    clauses = re.findall(r"\(band_id#\d+ = \d+\) AND \(bk#\d+ = \d+\)", pf_lines[0])
-    assert clauses, pf_lines[0]
-    assert len(clauses) <= 4, pf_lines[0]
-    assert "IN (" not in pf_lines[0], (
-        "cross-product isin pruning resurfaced: " + pf_lines[0]
-    )
-
-
 def test_aqe_splits_skewed_join_partition(spark):
     """AQE skew-join handling is the engine's answer to hot join keys
     (the reference's load-aware scheduling analog, and what the zipf

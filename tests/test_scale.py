@@ -366,7 +366,6 @@ def test_dup_offset_clears_replica_ids(spark, tmp_path):
         os.path.join(d, "documents.parquet"),
     )
 
-    llm._DUP_OFFSET_CACHE.clear()
     assert llm._dup_offset(spark, d) == 200_000
     corpus = llm._corpus(spark, d).toPandas()
     # Every id is unique: planted ids live strictly above the reals.
@@ -387,4 +386,3 @@ def test_dup_offset_clears_replica_ids(spark, tmp_path):
         ).fetchall()
     }
     assert oracle_ids == set(corpus.doc_id)
-    llm._DUP_OFFSET_CACHE.clear()

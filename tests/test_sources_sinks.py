@@ -178,3 +178,61 @@ def test_ctas_insert_drop_lifecycle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS nation_ctas")
         spark.catalog.dropTempView("_nation_src")
     assert not spark.catalog.tableExists("nation_ctas")
+
+
+def test_load_table_sets_excluded_rules_once(spark, monkeypatch):
+    """``pin_session_confs`` appends its optimizer rule to
+    ``excludedRules`` once: a later ``load_table`` finds it in place
+    and makes no ``RuntimeConfig.set`` round trip for that key."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    key = "spark.sql.optimizer.excludedRules"
+    before = spark.conf.get(key, None)
+    sets = []
+    real_set = RuntimeConfig.set
+
+    def counting_set(self, k, v):
+        if k == key:
+            sets.append(v)
+        return real_set(self, k, v)
+
+    spark.conf.unset(key)
+    monkeypatch.setattr(RuntimeConfig, "set", counting_set)
+    try:
+        load_table(spark, SF_DIR, "nation")
+        assert len(sets) == 1, sets
+        load_table(spark, SF_DIR, "nation")
+        assert len(sets) == 1, sets
+    finally:
+        monkeypatch.undo()
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
+def test_ship_package_reuses_one_zip_per_code_version(spark, tmp_path, monkeypatch):
+    """The shipped package zip is named by a hash of the sources, so
+    two ships of the same tree (from two applications or processes)
+    leave one zip in the temp dir, not one per driver process."""
+    import os
+    import tempfile
+    import zipfile
+
+    from datafusion_dist_spark import catalog
+
+    shipped = []
+    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
+    monkeypatch.setattr(spark.sparkContext, "addPyFile", shipped.append)
+    monkeypatch.setattr(catalog, "_SHIPPED_APPS", set())
+    catalog._ship_package(spark)
+    # A second driver process: new pid, nothing shipped yet.
+    other_pid = os.getpid() + 1
+    monkeypatch.setattr(os, "getpid", lambda: other_pid)
+    catalog._SHIPPED_APPS.clear()
+    catalog._ship_package(spark)
+    zips = list(tmp_path.iterdir())
+    assert len(zips) == 1, zips
+    assert shipped == [str(zips[0])] * 2
+    with zipfile.ZipFile(zips[0]) as z:
+        assert "datafusion_dist_spark/catalog.py" in z.namelist()

@@ -44,7 +44,6 @@ MEASURED_SOURCE = [
     "__spark_entry__.py",
     "bench.py",
     "bench_cores.py",
-    "bench_index.py",
     "bench_memory.py",
     "bench_scale.py",
     "tools_driver_sim.py",
